@@ -6,13 +6,33 @@ registered in the session catalog as views so both the DataFrame API
 and ``spark.sql`` resolve them. At 100 TB these would be external
 partitioned/bucketed tables in a real metastore; locally they are the
 driver-generated parquet files.
+
+Like a metastore, the layer learns each table's schema once. A bare
+``spark.read.parquet(path)`` starts a one-task Spark job that reads the
+parquet footer; ``schema`` keeps the inferred schema in a process-wide
+cache, and ``load`` passes it to ``spark.read.schema(...)``, which
+starts no job. The cache holds schemas only, never DataFrames, so every
+``load`` still returns a fresh relation with new attribute ids.
+
+Cache entries are keyed by the path's real path and hold the
+signature they were inferred under: the path's ``st_ino``,
+``st_mtime_ns`` and ``st_size``, plus the session's values of the
+parquet settings that change inference (``_SCHEMA_CONFS``). A lookup
+whose signature differs infers again and replaces the entry, so a file
+rewritten in place, or a Spark-written directory rewritten in place
+(which recreates the directory), is read with its new schema. A
+rewrite that changes only files below a directory's top level is not
+seen. Paths that ``os.stat`` cannot reach (remote URIs) are never
+cached.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Every table the driver pre-registers for the DuckDB oracle.
 TABLES = (
@@ -34,9 +54,52 @@ BROADCASTABLE = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session settings that change the schema Spark infers from a footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# real path -> (signature, schema); one entry per path, so rewrites of
+# one path never pile up entries. The lock guards the dict for client
+# threads sharing a session; inference runs outside it, so two threads
+# may both infer a new file's schema once.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet schema at ``path`` as ``spark.read.parquet`` infers
+    it under the session's current settings, inferred once per file
+    version (see the module docstring for the key and invalidation)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: let Spark resolve (or reject) it
+        return spark.read.parquet(path).schema
+    real = os.path.realpath(path)
+    sig = (st.st_ino, st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(k, None) for k in _SCHEMA_CONFS
+    )
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    inferred = spark.read.parquet(path).schema
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[real] = (sig, inferred)
+    return inferred
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame (vectorized parquet scan).
+
+    The scan is built from the cached ``schema``, so only the first
+    load of a table file (or of a new version of it) runs the
+    schema-inference job; later loads start no job. Each call returns
+    a new DataFrame, so two loads of one table self-join cleanly.
 
     ``events.ts`` has shipped in two physical encodings across testdata
     generations: parquet TIMESTAMP(NANOS) (which Spark's reader rejects
@@ -55,7 +118,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType, TimestampNTZType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = spark.read.schema(schema(spark, path)).parquet(path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -65,7 +128,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (cast to bigint, window ranges) needs TimestampType.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return spark.read.schema(schema(spark, path)).parquet(path)
 
 
 def par(spark: SparkSession, mult: int = 1) -> int:

@@ -171,12 +171,12 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Q9: product type profit (adapted: no partsupp → cost proxy) -----------
 
 _Q9_ORACLE = """
-SELECT nation, o_year, ROUND(SUM(amount), 2) AS sum_profit
+SELECT nation, o_year, CAST(ROUND(SUM(amount), 2) AS DOUBLE) AS sum_profit
 FROM (
   SELECT n_name AS nation,
          EXTRACT(year FROM o_orderdate)::BIGINT AS o_year,
-         l_extendedprice * (1 - l_discount)
-           - p_retailprice * 0.6 * l_quantity AS amount
+         CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
+           - CAST(p_retailprice * 0.6 * l_quantity AS DECIMAL(18,4)) AS amount
   FROM part
   JOIN lineitem ON p_partkey = l_partkey
   JOIN supplier ON s_suppkey = l_suppkey
@@ -197,15 +197,20 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Filter literal '%red%' matches the generated color vocabulary
     ('%green%' never does) so the part side is non-empty at every
-    scale factor."""
+    scale factor.
+
+    Each amount term is cast to DECIMAL(18,4) before the sum: both
+    terms are exact at four places, so the decimal sum does not depend
+    on summation order, and ROUND(..., 2) cannot land on a different
+    side of a half-cent than the oracle's. A double sum did, by 0.01."""
     part = load(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     orders = load(spark, sf_dir, "orders")
     nation = load(spark, sf_dir, "nation")
-    amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * 0.6 * F.col("l_quantity")
+    amount = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+        "decimal(18,4)"
+    ) - (F.col("p_retailprice") * 0.6 * F.col("l_quantity")).cast("decimal(18,4)")
     return (
         part.join(li, F.col("p_partkey") == F.col("l_partkey"))
         .join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
@@ -217,7 +222,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             amount.alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(F.round(F.sum("amount"), 2).alias("sum_profit"))
+        .agg(F.round(F.sum("amount"), 2).cast("double").alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 

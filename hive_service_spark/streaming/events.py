@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from hive_service_spark import catalog
 from hive_service_spark.registry import query
 
 # Checkpoints and foreachBatch sink targets are mutable state a
@@ -43,7 +44,7 @@ _CKPT = f"{_NS}/checkpoints"
 def _raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """Pre-conversion schema (ts read as long — see catalog.load)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return catalog.schema(spark, f"{sf_dir}/events.parquet")
 
 
 def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,11 +507,9 @@ def stream_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # stage events as 4 files so availableNow yields 4 micro-batches
     src_dir = f"{base}/src"
-    from hive_service_spark.catalog import load as _load
-
-    _load(spark, sf_dir, "events").repartition(4).write.parquet(src_dir)
+    catalog.load(spark, sf_dir, "events").repartition(4).write.parquet(src_dir)
     stream = spark.readStream.schema(
-        spark.read.parquet(src_dir).schema
+        catalog.schema(spark, src_dir)
     ).option("maxFilesPerTrigger", 1).parquet(src_dir)
 
     keys = ["event_type", "day"]

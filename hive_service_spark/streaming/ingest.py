@@ -27,6 +27,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.llm.dedup import (
     _band_frame,
     _h,
@@ -114,7 +115,7 @@ def _doc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = Path(sf_dir) / "documents.parquet"
     stage = Path(f"{_SCRATCH}/stream_doc_src") / Path(sf_dir).name
     stage_source(src, stage)
-    schema = spark.read.parquet(str(src)).schema
+    schema = catalog.schema(spark, str(src))
     return spark.readStream.schema(schema).parquet(str(stage))
 
 
@@ -388,7 +389,7 @@ def _dsir_static_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     function through many micro-batches."""
     from hive_service_spark.llm.selection import _dsir_features, _dsir_model
 
-    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus = catalog.load(spark, sf_dir, "documents")
     return _dsir_model(_dsir_features(corpus)).localCheckpoint(eager=True)
 
 
