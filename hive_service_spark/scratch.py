@@ -50,7 +50,9 @@ def _default_root() -> str:
                 return f"/dev/shm/spark-graft-scratch-{os.getuid()}"
         except OSError:
             pass
-    return "/root/repo/.scratch"
+    return os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+    )
 
 
 SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or _default_root()

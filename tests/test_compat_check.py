@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
+sys.path.insert(0, str(TOOLS))
 from hiveql_compat_check import called_names, classify, report  # noqa: E402
 
 
@@ -41,7 +43,7 @@ def test_report_blocking_and_exit_codes(tmp_path):
     ok = tmp_path / "ok.sql"
     ok.write_text("SELECT mask_last_n(c) FROM t;\nSELECT field(x, 'a');")
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/hiveql_compat_check.py", str(ok)],
+        [sys.executable, str(TOOLS / "hiveql_compat_check.py"), str(ok)],
         capture_output=True,
         text=True,
     )
@@ -50,7 +52,7 @@ def test_report_blocking_and_exit_codes(tmp_path):
     bad = tmp_path / "bad.sql"
     bad.write_text("SELECT reflect2(a, 'toString') FROM t")
     r2 = subprocess.run(
-        [sys.executable, "/root/repo/tools/hiveql_compat_check.py", str(bad)],
+        [sys.executable, str(TOOLS / "hiveql_compat_check.py"), str(bad)],
         capture_output=True,
         text=True,
     )

@@ -20,6 +20,7 @@ import shutil
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 _SCRIPT = textwrap.dedent(
     """
@@ -72,7 +73,7 @@ def test_hive_storage_format_roundtrips(tmp_path):
             capture_output=True,
             text=True,
             timeout=300,
-            cwd="/root/repo",
+            cwd=Path(__file__).resolve().parent.parent,
         )
         assert out.returncode == 0, f"stderr tail: {out.stderr[-2000:]}"
         assert "HIVE_FORMATS_OK" in out.stdout

@@ -489,12 +489,20 @@ class TestRound13ReviewFixes:
         import bench
 
         assert bench._Q8_WATCH[0] == "q8_market_share"
-        # the computation guards on host_factor truthiness — replicate
-        times = {"q8_market_share": 1.0}
-        hf = None
-        val = (
-            round(times["q8_market_share"] / hf / bench._Q8_WATCH[1], 3)
-            if "q8_market_share" in times and hf
-            else None
-        )
-        assert val is None
+        # no sentinel timed -> no host factor -> no corrected ratio
+        run = bench._summarize({"q8_market_share": 1.0}, {})
+        assert run["host_factor"] is None
+        assert run["q8_corrected"] is None
+
+        # sentinels at 1.5x, 2x, 2x and 3x their anchors -> median
+        # host_factor 2.0, and q8 at 2x its anchor corrects back to 1.0
+        factors = (1.5, 2.0, 2.0, 3.0)
+        times = {
+            name: f * ref
+            for (name, ref), f in zip(bench._SENTINELS.items(), factors)
+        }
+        times["q8_market_share"] = 2 * bench._Q8_WATCH[1]
+        run = bench._summarize(times, {})
+        assert run["host_factor"] == 2.0
+        assert run["host_factor_spread"] == 1.5
+        assert run["q8_corrected"] == 1.0

@@ -1,0 +1,107 @@
+"""Tool lint: one timing loop, and no fixed checkout path.
+
+Rule 1: a noop-sink write (``<x>.write.format("noop")``) is how a run
+is timed, so outside ``bench.measure`` it means a copy of the timing
+protocol. None may appear in ``bench.py`` or ``tools/``; time through
+``bench.measure``. ``writeStream`` sinks are not timing loops, and
+``perfbench/`` is the benchmark's own harness, out of scope.
+
+Rule 2: no ``.py`` file under ``hive_service_spark/``, ``tools/`` or
+``tests/``, nor ``bench.py``, names the absolute checkout path. A copy
+of the tree (an A/B checkout) would otherwise import, run or write
+into the original; derive paths from ``__file__``.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+# spelled in parts so this file does not match itself
+_CHECKOUT_PATH = "/".join(("", "root", "repo"))
+
+
+def _is_noop_write(call: ast.Call) -> bool:
+    """``<x>.write.format("noop")`` (not ``writeStream``)."""
+    f = call.func
+    return (
+        isinstance(f, ast.Attribute)
+        and f.attr == "format"
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "write"
+        and len(call.args) == 1
+        and isinstance(call.args[0], ast.Constant)
+        and call.args[0].value == "noop"
+    )
+
+
+def noop_writes(source: str, allowed_fn: str | None = None) -> list[int]:
+    """Lines of noop-sink writes outside top-level function `allowed_fn`."""
+    tree = ast.parse(source)
+    allowed: set[int] = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name == allowed_fn:
+            allowed |= {id(n) for n in ast.walk(node)}
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and _is_noop_write(node)
+        and id(node) not in allowed
+    )
+
+
+def test_only_bench_measure_times_through_a_noop_sink():
+    bad = [
+        f"bench.py:{line}"
+        for line in noop_writes((ROOT / "bench.py").read_text(), "measure")
+    ]
+    for path in sorted((ROOT / "tools").glob("*.py")):
+        bad += [f"tools/{path.name}:{line}" for line in noop_writes(path.read_text())]
+    assert not bad, f"noop-sink timing loop outside bench.measure: {bad}"
+    # and bench.measure itself still holds the one loop
+    assert noop_writes((ROOT / "bench.py").read_text()), "bench.measure lost its sink"
+
+
+def test_noop_lint_detects_copies():
+    """Self-test: flags noop writes outside the allowed function,
+    chained or not, and passes writeStream and other formats."""
+    src = '''
+def measure(spark, fn):
+    fn().write.format("noop").mode("overwrite").save()
+
+def copy(spark, df):
+    df.write.format("noop").mode("overwrite").save()
+
+def chained(spec, spark, sf):
+    spec.fn(spark, sf).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+def ok_stream(df):
+    return df.writeStream.format("noop").start()
+
+def ok_parquet(df):
+    df.write.format("parquet").save("/tmp/x")
+'''
+    assert noop_writes(src, "measure") == [6, 9]
+    assert noop_writes(src) == [3, 6, 9]
+
+
+def test_no_fixed_checkout_path():
+    files = [ROOT / "bench.py"] + [
+        path
+        for top in ("hive_service_spark", "tools", "tests")
+        for path in sorted((ROOT / top).rglob("*.py"))
+    ]
+    bad = [
+        f"{path.relative_to(ROOT)}:{n}"
+        for path in files
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _CHECKOUT_PATH in line
+    ]
+    assert not bad, (
+        f"hard-coded {_CHECKOUT_PATH}: a copy of the tree would use the "
+        f"original; derive the path from __file__: {bad}"
+    )

@@ -8,6 +8,7 @@ own config. Usage: python tools/driver_sim.py [sf_dir]
 from __future__ import annotations
 
 import hashlib
+import os
 import re
 import sys
 import time
@@ -15,7 +16,7 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e  # noqa: E402
 
 _args = [a for a in sys.argv[1:] if not a.startswith("--")]

@@ -28,24 +28,30 @@ oracle sides.
 Non-scaled tables are symlinked so registered queries run unchanged
 against the scaled dir. Writes SCALE.md.
 
+Each measurement set is one `bench.py NAME ...` subprocess with
+SPARK_GRAFT_SF_DIR pointed at the base or scaled dir (bench's timing
+protocol: one warmup, min of two). The probe modes below time through
+`bench.measure`.
+
 Usage: python tools/scale_probe.py            # orchestrate + report
+       python tools/scale_probe.py --skip-build   # re-measure existing dirs
        python tools/scale_probe.py --build N_docs N_vecs N_li
-       python tools/scale_probe.py --measure <sf_dir> q1,q2,...
+       python tools/scale_probe.py --wand-mix | --mp-cost | --lead-caps | --soak
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import subprocess
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DEFAULT = "/root/repo/.scratch/scale_probe"
+OUT_DEFAULT = os.path.join(REPO, ".scratch", "scale_probe")
 OUT = os.environ.get("SPARK_GRAFT_SCALE_DIR", OUT_DEFAULT)
 
 TABLES = (
@@ -472,28 +478,6 @@ def _build(n_docs: int, n_vecs: int, n_li: int) -> None:
     spark.stop()
 
 
-def _measure(sf_dir: str, names: list[str]) -> None:
-    from hive_service_spark.registry import load_all
-    from hive_service_spark.session import get_session
-
-    specs = load_all()
-    spark = get_session("scale_measure")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-    for name in names:
-        best = None
-        for measured in (False, True, True):
-            t0 = time.perf_counter()
-            df = specs[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if measured and (best is None or dt < best):
-                best = dt
-            spark.catalog.clearCache()
-        print(json.dumps({"query": name, "sf": sf_dir, "t": round(best, 3)}))
-    spark.stop()
-
-
 def _wand_mix() -> None:
     """Measure WAND's pruned-vs-fallback probe mix on a corpus with a
     REALISTIC Zipf vocabulary (round-7 advice #5). The sf0.1 gate
@@ -506,6 +490,7 @@ def _wand_mix() -> None:
     bench number carries its context in measured evidence."""
     import random
 
+    from bench import measure
     from hive_service_spark.llm.text import (
         _BM25_QCAP,
         _BM25_QMOD,
@@ -551,17 +536,8 @@ def _wand_mix() -> None:
     specs = load_all()
     times = {}
     for name in ("text_bm25_wand_retrieval", "text_bm25_retrieval"):
-        best = None
-        for measured in (False, True, True):
-            t0 = time.perf_counter()
-            specs[name].fn(spark, zdir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            if measured and (best is None or dt < best):
-                best = dt
-            spark.catalog.clearCache()
-        times[name] = round(best, 3)
+        run = functools.partial(specs[name].fn, spark, zdir)
+        times[name] = round(min(measure(spark, run)), 3)
     print(
         json.dumps(
             {
@@ -593,6 +569,7 @@ def _mp_cost() -> None:
     pays for the Python stage."""
     import pyspark.sql.functions as F
 
+    from bench import measure
     from hive_service_spark.catalog import load
     from hive_service_spark.operators.matchpath import matchpath
     from hive_service_spark.session import get_session
@@ -643,24 +620,17 @@ def _mp_cost() -> None:
     for pattern, plan_kind, syms in cases:
         times, prints = {}, {}
         for key, force in (("compiled", False), ("automaton", True)):
-            best = None
-            for measured in (False, True, True):
-                t0 = time.perf_counter()
-                out = matchpath(
-                    ev,
-                    partition_by="user_id",
-                    order_by=["ts", "event_id"],
-                    symbols=syms(),
-                    pattern=pattern,
-                    force_automaton=force,
-                )
-                out.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                if measured and (best is None or dt < best):
-                    best = dt
-                spark.catalog.clearCache()
-            times[key] = round(best, 3)
-            fp = out.agg(
+            run = functools.partial(
+                matchpath,
+                ev,
+                partition_by="user_id",
+                order_by=["ts", "event_id"],
+                symbols=syms(),
+                pattern=pattern,
+                force_automaton=force,
+            )
+            times[key] = round(min(measure(spark, run)), 3)
+            fp = run().agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("match_len").alias("sl"),
                 F.sum("start_rn").alias("sr"),
@@ -701,6 +671,7 @@ def _lead_caps() -> None:
     import pyspark.sql.functions as F
 
     import hive_service_spark.operators.matchpath as mp
+    from bench import measure
     from hive_service_spark.catalog import load
     from hive_service_spark.session import get_session
 
@@ -725,22 +696,17 @@ def _lead_caps() -> None:
             mp._LEAD_MAX_COMPS = 4096  # measure past the shipped cap
             times, prints = {}, {}
             for key, force in (("compiled", False), ("automaton", True)):
-                best = None
-                for measured in (False, True, True):
-                    t0 = time.perf_counter()
-                    out = mp.matchpath(
-                        ev,
-                        partition_by="user_id",
-                        order_by=["ts", "event_id"],
-                        symbols=syms(),
-                        pattern=pattern,
-                        force_automaton=force,
-                    )
-                    out.write.format("noop").mode("overwrite").save()
-                    dt = time.perf_counter() - t0
-                    if measured and (best is None or dt < best):
-                        best = dt
-                    spark.catalog.clearCache()
+                run = functools.partial(
+                    mp.matchpath,
+                    ev,
+                    partition_by="user_id",
+                    order_by=["ts", "event_id"],
+                    symbols=syms(),
+                    pattern=pattern,
+                    force_automaton=force,
+                )
+                times[key] = round(min(measure(spark, run)), 3)
+                out = run()
                 if key == "compiled":
                     # the measurement is only honest if the compiled
                     # path really took the lead-chain plan
@@ -751,7 +717,6 @@ def _lead_caps() -> None:
                         pattern,
                         "compiled run fell back to the automaton",
                     )
-                times[key] = round(best, 3)
                 fp = out.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum("match_len").alias("sl"),
@@ -824,41 +789,25 @@ def _soak() -> None:
 
 
 def _run_measure(sf_dir: str, names: list[str], extra_env=None) -> dict[str, float]:
-    env = dict(os.environ)
-    env.update(extra_env or {})
+    """`bench.py NAME ...` at `sf_dir` in a fresh JVM: per-query seconds."""
+    env = {**os.environ, **(extra_env or {}), "SPARK_GRAFT_SF_DIR": sf_dir}
     out = subprocess.run(
-        [
-            sys.executable,
-            os.path.abspath(__file__),
-            "--measure",
-            sf_dir,
-            ",".join(names),
-        ],
+        [sys.executable, os.path.join(REPO, "bench.py"), *names],
         capture_output=True,
         text=True,
         env=env,
         cwd=REPO,
         timeout=3000,
     )
-    times = {}
-    for line in out.stdout.splitlines():
-        try:
-            rec = json.loads(line)
-            times[rec["query"]] = rec["t"]
-        except (json.JSONDecodeError, KeyError):
-            pass
     if out.returncode != 0:
         sys.stderr.write(out.stderr[-3000:])
-        raise SystemExit(f"measure subprocess failed for {sf_dir}")
-    return times
+        raise SystemExit(f"bench.py subprocess failed for {sf_dir}")
+    return json.loads(out.stdout.splitlines()[-1])["queries"]
 
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--build":
         _build(int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--measure":
-        _measure(sys.argv[2], sys.argv[3].split(","))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--wand-mix":
         _wand_mix()
