@@ -14,16 +14,19 @@ cache, and ``load`` passes it to ``spark.read.schema(...)``, which
 starts no job. The cache holds schemas only, never DataFrames, so every
 ``load`` still returns a fresh relation with new attribute ids.
 
-Cache entries are keyed by the path's real path and hold the
-signature they were inferred under: the path's ``st_ino``,
-``st_mtime_ns`` and ``st_size``, plus the session's values of the
-parquet settings that change inference (``_SCHEMA_CONFS``). A lookup
-whose signature differs infers again and replaces the entry, so a file
-rewritten in place, or a Spark-written directory rewritten in place
-(which recreates the directory), is read with its new schema. A
+Cache entries are keyed by the path's real path and the session's
+values of the parquet settings that change inference
+(``_SCHEMA_CONFS``), and hold the file signature they were inferred
+under: the path's ``st_ino``, ``st_mtime_ns`` and ``st_size``. A
+lookup whose signature differs infers again and replaces the entry, so
+a file rewritten in place, or a Spark-written directory rewritten in
+place (which recreates the directory), is read with its new schema. A
 rewrite that changes only files below a directory's top level is not
-seen. Paths that ``os.stat`` cannot reach (remote URIs) are never
-cached.
+seen. The settings are part of the key, not of the signature, because
+each registered query runs in its own session copy: one that loads
+``events`` sets ``nanosAsLong`` and one that does not leaves it unset,
+and neither may evict the other's entry for the same file. Paths that
+``os.stat`` cannot reach (remote URIs) are never cached.
 """
 
 from __future__ import annotations
@@ -63,11 +66,11 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# real path -> (signature, schema); one entry per path, so rewrites of
-# one path never pile up entries. The lock guards the dict for client
-# threads sharing a session; inference runs outside it, so two threads
-# may both infer a new file's schema once.
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# (real path, settings) -> (file signature, schema); one entry per path
+# and settings, so rewrites of one path never pile up entries. The lock
+# guards the dict for client threads sharing a session; inference runs
+# outside it, so two threads may both infer a new file's schema once.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 _SCHEMAS_LOCK = threading.Lock()
 
 
@@ -79,17 +82,17 @@ def schema(spark: SparkSession, path: str) -> StructType:
         st = os.stat(path)
     except OSError:  # not a local path: let Spark resolve (or reject) it
         return spark.read.parquet(path).schema
-    real = os.path.realpath(path)
-    sig = (st.st_ino, st.st_mtime_ns, st.st_size) + tuple(
+    key = (os.path.realpath(path),) + tuple(
         spark.conf.get(k, None) for k in _SCHEMA_CONFS
     )
+    sig = (st.st_ino, st.st_mtime_ns, st.st_size)
     with _SCHEMAS_LOCK:
-        hit = _SCHEMAS.get(real)
+        hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1]
     inferred = spark.read.parquet(path).schema
     with _SCHEMAS_LOCK:
-        _SCHEMAS[real] = (sig, inferred)
+        _SCHEMAS[key] = (sig, inferred)
     return inferred
 
 

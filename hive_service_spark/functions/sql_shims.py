@@ -108,17 +108,22 @@ for _unit in (
     )
 
 
-def register_sql_shims(spark: SparkSession) -> None:
-    """Register every fixed-signature shim as a temporary SQL UDF —
-    once per session, like Hive's FunctionRegistry registers temporary
-    functions per session. One functionExists probe short-circuits the
-    14 DDL round-trips on every call after the first (round-13 review:
-    hive_sql runs inside measured bench queries, where the redundant
-    re-registration was counted time)."""
-    if spark.catalog.functionExists("mask_show_last_n"):
-        return
-    for ddl in _SQL_UDF_DEFS.values():
-        spark.sql(ddl)
+_SQL_UDF_CALL_RE = re.compile(
+    r"\b(" + "|".join(_SQL_UDF_DEFS) + r")\s*\(", re.IGNORECASE
+)
+
+
+def register_sql_shims(spark: SparkSession, sql: str) -> None:
+    """Register the fixed-signature shims that ``sql`` calls as
+    temporary SQL UDFs in ``spark``, as Hive's FunctionRegistry serves
+    temporary functions per session. Only the named shims are created:
+    a registered query runs in a fresh copy of its caller's session
+    (registry.run), so registering all 14 would cost 14 DDL
+    statements on every call. A shim the session already has (the
+    caller registered it, or an earlier statement did) is skipped."""
+    for name in {m.group(1).lower() for m in _SQL_UDF_CALL_RE.finditer(sql)}:
+        if not spark.catalog.functionExists(name):
+            spark.sql(_SQL_UDF_DEFS[name])
 
 
 # --- 2. variadic/generic shims as literal-aware macros --------------------
@@ -399,10 +404,9 @@ def hive_sql(spark: SparkSession, sql: str) -> DataFrame:
         strip_comments,
     )
 
-    register_sql_shims(spark)
-    return spark.sql(
-        _route_npath_calls(spark, expand_shim_macros(strip_comments(sql)))
-    )
+    sql = strip_comments(sql)
+    register_sql_shims(spark, sql)
+    return spark.sql(_route_npath_calls(spark, expand_shim_macros(sql)))
 
 
 # ---------------------------------------------------------------------------

@@ -153,20 +153,16 @@ def ddl_dynamic_partition_overwrite(
         .partitionBy("o_year")
         .saveAsTable("hs_scratch.orders_part", format="parquet")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        spark.sql(
-            """
-            INSERT OVERWRITE TABLE hs_scratch.orders_part
-            SELECT o_orderkey, o_custkey, o_orderstatus,
-                   o_totalprice * 0.5 AS o_totalprice,
-                   o_orderdate, o_orderpriority, o_year
-            FROM hs_scratch.orders_part WHERE o_year = 1997
-            """
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    spark.sql(
+        """
+        INSERT OVERWRITE TABLE hs_scratch.orders_part
+        SELECT o_orderkey, o_custkey, o_orderstatus,
+               o_totalprice * 0.5 AS o_totalprice,
+               o_orderdate, o_orderpriority, o_year
+        FROM hs_scratch.orders_part WHERE o_year = 1997
+        """
+    )
     return spark.sql(
         """
         SELECT o_year, COUNT(*) AS n_orders,
@@ -868,18 +864,14 @@ def ddl_exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     if "o_year=1997" in existing:
         raise RuntimeError("EXCHANGE target already holds o_year=1997")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        spark.sql(
-            """
-            INSERT OVERWRITE TABLE hs_scratch.orders_xmain
-            SELECT price, o_year FROM hs_scratch.orders_xstage
-            WHERE o_year = 1997
-            """
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    spark.sql(
+        """
+        INSERT OVERWRITE TABLE hs_scratch.orders_xmain
+        SELECT price, o_year FROM hs_scratch.orders_xstage
+        WHERE o_year = 1997
+        """
+    )
     spark.sql(
         "ALTER TABLE hs_scratch.orders_xstage "
         "DROP IF EXISTS PARTITION (o_year=1997)"

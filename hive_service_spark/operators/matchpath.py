@@ -1788,121 +1788,9 @@ def seq_matchpath_optional_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: the SQL-callable npath PTF surface — a Python UDTF
-# with a TABLE(...) PARTITION BY ... ORDER BY argument (Spark 4), the
-# exact call shape of the reference's PTF
-# ---------------------------------------------------------------------------
-
-
-# hard per-partition buffer guard for the demo UDTF surface: a hot key
-# past this raises a clear budget error (naming the bounded surfaces)
-# instead of silently buffering an unbounded history in one Python
-# worker — the straggler class capped_user_prefix exists to bound
-_NPATH_UDTF_MAX_ROWS = 1_000_000
-
-
-def _npath_udtf(pattern: str, symbol_order: list[str]):
-    """Build the hs_npath Python UDTF for a pattern whose symbol names
-    ARE event_type values (the demo surface's convention). The regex
-    and symbol->char map come from compile_pattern — the same source
-    of truth the DataFrame operator compiles from (round-10 ADVICE #3:
-    the old version hardcoded 'aa*b' and drifted independently)."""
-    from pyspark.sql.functions import udtf
-
-    chars, rx_src = compile_pattern(pattern, symbol_order)
-
-    @udtf(
-        returnType=(
-            "user_id bigint, start_rn int, match_len int, "
-            "path_start timestamp, path_end timestamp"
-        )
-    )
-    class NPath:
-        def __init__(self) -> None:
-            self._rows: list = []
-
-        def eval(self, row) -> None:
-            if len(self._rows) >= _NPATH_UDTF_MAX_ROWS:
-                raise RuntimeError(
-                    "hs_npath: partition exceeds the "
-                    f"{_NPATH_UDTF_MAX_ROWS}-row UDTF buffer guard — "
-                    "use the compiled SQL surface (npath_sql / "
-                    "seq_npath_sql_compiled) or a MAXROWS per-user "
-                    "budget (seq_npath_sql_capped)"
-                )
-            self._rows.append(
-                (row["user_id"], row["ts"], chars.get(row["event_type"], "x"))
-            )
-
-        def terminate(self):
-            import re as _re
-
-            rx = _re.compile(rx_src)
-            s = "".join(c for _, _, c in self._rows)
-            for i in range(len(s)):
-                m = rx.match(s, i)
-                if m and m.end() > i:
-                    yield (
-                        self._rows[0][0],
-                        i + 1,
-                        m.end() - i,
-                        self._rows[i][1],
-                        self._rows[m.end() - 1][1],
-                    )
-
-    return NPath
-
-
-@query("seq_npath_sql_ptf", oracle=_GENERAL_ORACLE)
-def seq_npath_sql_ptf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's npath is a SQL-CALLABLE partitioned table
-    function — ``npath(ON events PARTITION BY user_id ORDER BY ts, …)``
-    (hive-exec-2.3.10-core.jar!ql/udf/ptf/MatchPath.class registered
-    as npath/matchpath in FunctionRegistry) — so parity needs the SQL
-    entry point, not just the DataFrame-API operator. Spark 4's
-    Python UDTF TABLE arguments reproduce the PTF execution model
-    exactly: ``hs_npath(TABLE(...) PARTITION BY user_id ORDER BY ts,
-    event_id)`` streams each partition's rows IN ORDER through one
-    UDTF instance (eval per row, terminate emits the matches), which
-    is precisely how the reference's PTFOperator feeds MatchPath.
-
-    Same pattern and output contract as seq_matchpath_general
-    (``view.view*.purchase``; one row per match start), sharing its
-    oracle — so the value hash proves the SQL surface agrees with both
-    the DataFrame operator's compiled island-walk plan and the DuckDB
-    regex model. This query IS the Python-stage surface (an Arrow
-    batched UDTF, one pass per partition) kept as the PTF execution
-    model's demonstration; round 11 adds the surfaces a 100 TB caller
-    should use instead — seq_npath_sql_compiled (npath_sql -> the
-    Python-free compiled plan, same oracle) and seq_npath_sql_capped
-    (MAXROWS budget on the automaton class) — and this UDTF now (a)
-    derives its regex and symbol map from compile_pattern, sharing one
-    source of truth with the DataFrame operator (round-10 ADVICE #3),
-    and (b) refuses a partition larger than its buffer guard with an
-    error naming those bounded surfaces, instead of buffering a hot
-    key's unbounded history silently."""
-    spark.udtf.register(
-        "hs_npath", _npath_udtf("view.view*.purchase", ["view", "purchase"])
-    )
-    load(spark, sf_dir, "events").createOrReplaceTempView("npath_events_src")
-    return spark.sql(
-        """
-        SELECT * FROM hs_npath(
-          TABLE(SELECT user_id, ts, event_id, event_type
-                FROM npath_events_src)
-          PARTITION BY user_id ORDER BY (ts, event_id)
-        )
-        ORDER BY user_id, start_rn
-        """
-    )
-
-
-# ---------------------------------------------------------------------------
-# round 11: the SQL-callable npath surface routed through the COMPILED
-# planner — a mini PTF-call parser in front of matchpath(), so a SQL
-# caller gets the same island-walk / lead-chain JVM plans the DataFrame
-# API compiles to (verdict #1: the UDTF surface was the only entry
-# point, and it always buffered each partition in Python)
+# the SQL-callable npath surface: a PTF-call parser in front of
+# matchpath(), so a SQL caller gets the same island-walk / lead-chain
+# JVM plans the DataFrame API compiles to
 # ---------------------------------------------------------------------------
 
 _NPATH_KEYWORDS = (
@@ -2385,17 +2273,16 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
 
 @query("seq_npath_sql_compiled", oracle=_GENERAL_ORACLE)
 def seq_npath_sql_compiled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL npath call routed through the COMPILED planner (round
-    11, verdict #1): the same ``view.view*.purchase`` contract as
-    seq_matchpath_general / seq_npath_sql_ptf — all three share one
-    oracle — but the SQL text reaches _matchpath_jvm_chain's island
-    walk via npath_sql's call parser, so the plan is Python-free (plan
-    pinned in test_matchpath_compile.py) while the call shape stays
-    the reference PTF's (hive-exec-2.3.10-core.jar!ql/udf/ptf/
-    MatchPath.class registered as npath/matchpath). This is the
-    surface a 100 TB SQL caller should use: the Arrow UDTF twin
-    (seq_npath_sql_ptf) buffers each partition in one Python worker;
-    this one never leaves the JVM."""
+    """The reference's npath is a SQL-callable partitioned table
+    function (hive-exec-2.3.10-core.jar!ql/udf/ptf/MatchPath.class,
+    registered as npath/matchpath); this entry calls it in that shape,
+    ``npath(ON ... PARTITION BY ... ORDER BY ... SYMBOLS(...)
+    PATTERN(...))``. It has the same ``view.view*.purchase`` contract
+    as seq_matchpath_general and shares its oracle, so one value hash
+    proves the SQL surface, the DataFrame operator and the DuckDB regex
+    model agree. npath_sql's call parser hands the pattern to
+    _matchpath_jvm_chain's island walk, so the plan never leaves the
+    JVM (plan pinned in test_matchpath_compile.py)."""
     load(spark, sf_dir, "events").createOrReplaceTempView(
         "npath_events_src"
     )

@@ -142,39 +142,23 @@ def opt_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(
             f"ANALYZE TABLE hs_opt.{tbl} COMPUTE STATISTICS FOR ALL COLUMNS"
         )
-    old = {
-        k: spark.conf.get(k, None)
-        for k in ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    }
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try:
-        df = spark.sql(
-            f"""
-            SELECT n_name,
-                   COUNT(*) AS n_items,
-                   CAST(SUM(l_quantity) AS BIGINT) AS total_qty
-            FROM hs_opt.{names['lineitem']}
-            JOIN hs_opt.{names['customer']}
-              ON l_orderkey % 1500 + 1 = c_custkey
-            JOIN hs_opt.{names['nation']}
-              ON c_nationkey = n_nationkey
-            WHERE n_name IN ('NATION_0', 'NATION_1')
-            GROUP BY n_name
-            ORDER BY n_name
-            """
-        )
-        # Force plan materialization NOW: QueryExecution memoizes its
-        # optimized/executed plan, so the reorder is decided while the
-        # CBO confs are still set, not at the caller's action time.
-        df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return spark.sql(
+        f"""
+        SELECT n_name,
+               COUNT(*) AS n_items,
+               CAST(SUM(l_quantity) AS BIGINT) AS total_qty
+        FROM hs_opt.{names['lineitem']}
+        JOIN hs_opt.{names['customer']}
+          ON l_orderkey % 1500 + 1 = c_custkey
+        JOIN hs_opt.{names['nation']}
+          ON c_nationkey = n_nationkey
+        WHERE n_name IN ('NATION_0', 'NATION_1')
+        GROUP BY n_name
+        ORDER BY n_name
+        """
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -208,48 +192,28 @@ def opt_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — the one that matters at 100 TB where orders outgrows any
     broadcast — is what gets exercised. Plan pin in
     tests/test_plans.py. Money sums in DECIMAL (order-independent)."""
-    old = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
     spark.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
         "0",
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    orders = load(spark, sf_dir, "orders").where(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    net = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(net).cast("double").alias("revenue"),
         )
-        orders = load(spark, sf_dir, "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        net = (
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).cast("decimal(18,4)")
-        df = (
-            li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum(net).cast("double").alias("revenue"),
-            )
-            .orderBy("o_year")
-        )
-        # memoize the plan while the runtime-filter confs are in force
-        df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        .orderBy("o_year")
+    )
 
 
 # ---------------------------------------------------------------------------

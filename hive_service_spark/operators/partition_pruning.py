@@ -33,6 +33,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -45,8 +46,8 @@ from hive_service_spark.scratch import SCRATCH_ROOT as _SCRATCH_ROOT
 
 _SCRATCH = f"{_SCRATCH_ROOT}/fixtures-partitioned"
 
-# per-process memo of staged layouts (see staged_lineitem_by_month)
-_STAGED: dict = {}
+# staged layouts already checked against their source this process
+_STAGED: set[str] = set()
 
 
 def staged_lineitem_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,30 +57,34 @@ def staged_lineitem_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship_month = 'yyyy-MM' of l_shipdate (~84 directories). Dynamic
     partition write — the reference's SortedDynPartitionOptimizer path,
     Spark's `partitionBy` on write (SURVEY.md §2.1 FileSinkOperator).
+
+    The staleness check runs once per process (the source parquet is
+    immutable within a process lifetime). The frame is built on every
+    call, in the caller's session, from `catalog.schema`'s cached
+    schema, so a warm call starts no Spark job and the frame plans
+    under the calling query's confs.
     """
     dest = f"{_SCRATCH}/{os.path.basename(os.path.normpath(sf_dir))}/lineitem_by_month"
-    if dest in _STAGED:
-        # staleness was checked once this process; the source parquet is
-        # immutable within a process lifetime, and returning the same
-        # DataFrame reuses Spark's cached file index for the 84
-        # partition directories instead of re-listing them per call
-        return _STAGED[dest]
-    marker = f"{dest}/_SUCCESS"
-    src = f"{sf_dir}/lineitem.parquet"
-    stale = not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src)
-    if stale:
-        (
-            load(spark, sf_dir, "lineitem")
-            .withColumn("ship_month", F.date_format("l_shipdate", "yyyy-MM"))
-            # one file per partition directory: repartition on the
-            # partition column so 32 tasks don't each write 84 tiny files
-            .repartition("ship_month")
-            .write.mode("overwrite")
-            .partitionBy("ship_month")
-            .parquet(dest)
-        )
-    _STAGED[dest] = spark.read.parquet(dest)
-    return _STAGED[dest]
+    if dest not in _STAGED:
+        marker = f"{dest}/_SUCCESS"
+        src = f"{sf_dir}/lineitem.parquet"
+        if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
+            (
+                load(spark, sf_dir, "lineitem")
+                .withColumn("ship_month", F.date_format("l_shipdate", "yyyy-MM"))
+                # one file per partition directory: repartition on the
+                # partition column so 32 tasks don't each write 84 tiny files
+                .repartition("ship_month")
+                .write.mode("overwrite")
+                .partitionBy("ship_month")
+                .parquet(dest)
+            )
+        _STAGED.add(dest)
+    # list the ~84 partition directories on the driver: past the
+    # default threshold of 32, Spark starts a listing job per read,
+    # which cost 0.63 s against 0.05 s at sf0.1 (4 cores)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    return spark.read.schema(catalog.schema(spark, dest)).parquet(dest)
 
 
 _STATIC_ORACLE = """

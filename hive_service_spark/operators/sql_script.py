@@ -224,12 +224,6 @@ def run_script(
         register_sql_shims,
     )
 
-    # round 13: the full FunctionRegistry name surface — fixed-signature
-    # shims as session SQL UDFs, variadic/generic ones macro-expanded
-    # per statement (functions/sql_shims.py) — so a migrating HiveQL
-    # script uses `field`, `mask_*_n`, `floor_<unit>`, `create_union`,
-    # `parse_url_tuple`, `in_file` verbatim, as it did against Hive.
-    register_sql_shims(spark)
     bindings = dict(bindings or {})
     result: DataFrame | None = None
     for raw in split_statements(script):
@@ -248,6 +242,12 @@ def run_script(
             key = key.removeprefix("hiveconf:")
             spark.conf.set(key, val)
             continue
+        # the full FunctionRegistry name surface (functions/sql_shims.py):
+        # fixed-signature shims as session SQL UDFs, variadic/generic
+        # ones macro-expanded, so a migrating HiveQL script uses
+        # `field`, `mask_*_n`, `floor_<unit>`, `create_union`,
+        # `parse_url_tuple`, `in_file` verbatim, as it did against Hive
+        register_sql_shims(spark, stmt)
         stmt = _route_npath_calls(spark, expand_shim_macros(stmt))
         result = spark.sql(stmt)
     return result

@@ -8,6 +8,15 @@ A registered query is a callable ``(spark, sf_dir) -> DataFrame`` plus
 an optional ANSI-SQL oracle string DuckDB can run over the same parquet
 tables. Column names/aliases MUST match between the two — the driver
 sorts columns by name before value-hashing.
+
+A registered query runs in its own copy of the caller's session, as a
+HiveServer2 client session runs on its own ``SessionState``
+(:func:`run`). The copy starts with the caller's runtime confs, temp
+views and temp functions. Shared with the caller: the SparkContext, the
+cache, catalog tables and :func:`persisted` eviction. Per query: confs,
+temp views, temp functions, session variables and the streaming
+manager. What a query sets stays in force when the caller later runs
+the returned frame, and never reaches the caller or a peer query.
 """
 
 from __future__ import annotations
@@ -131,6 +140,53 @@ _QUERY_MODULES = (
 )
 
 
+def run(fn: QueryFn, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run ``fn`` as every registered query runs: first drop this
+    thread's previous query's tracked persists (:func:`persisted`),
+    then call ``fn`` on a clone of ``spark``. ``cloneSession`` (not
+    ``newSession``) keeps the caller's runtime confs, temp views and
+    temp functions, so a setting the caller made before the call
+    reaches the query. While ``fn`` runs, the clone is also this
+    thread's active JVM session, as Hive makes a client's SessionState
+    current for the thread serving it: Spark resolves some names, such
+    as a Python data source's format, through the active session."""
+    _evict_previous()
+    jclass = getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession")
+    session = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    active = jclass.getActiveSession()
+    jclass.setActiveSession(session._jsparkSession)
+    try:
+        return fn(session, sf_dir)
+    finally:
+        if active.isDefined():
+            jclass.setActiveSession(active.get())
+        else:
+            jclass.clearActiveSession()
+        release_stream_bus(session._jsparkSession)
+
+
+def release_stream_bus(jsession) -> None:
+    """Take a JVM session's streaming listener bus off the SparkContext.
+
+    A session's streaming manager is made the first time the session
+    starts a stream or reads its stream state, and it adds a listener
+    bus to the SparkContext's listener bus that nothing removes. Both
+    the query's session (:func:`run`) and the session Spark clones for
+    each stream (``streaming.events.await_stream``) can make one. The
+    manager and its bus are private fields, hence the reflection. The
+    bus stays while a stream of the session is still active, since it
+    reports that stream's progress."""
+    state = jsession.sessionState()
+    field = state.getClass().getDeclaredField("streamingQueryManager")
+    field.setAccessible(True)
+    manager = field.get(state)  # None until the session first streams
+    if manager is None or len(manager.active()):
+        return
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    jsession.sparkContext().listenerBus().removeListener(field.get(manager))
+
+
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn`` under ``name`` with its SQL oracle."""
 
@@ -140,16 +196,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Drop the PREVIOUS registered query's tracked persists on
-            # THIS thread (see :func:`persisted`) — bounds live
-            # executor cache to one query's frames per thread without
-            # touching caches built outside the registry (round-5
-            # advice: clearCache() was session-global) and without
-            # evicting a concurrent peer's in-flight intermediates
-            # (round-6 advice: the global list made new arrivals
-            # thrash iterative peers' caches).
-            _evict_previous()
-            return fn(spark, sf_dir)
+            return run(fn, spark, sf_dir)
 
         _REGISTRY[name] = QuerySpec(name=name, fn=wrapped, oracle=oracle)
         return fn

@@ -27,13 +27,14 @@ from pathlib import Path
 # disk shows multi-second I/O jitter that hit every scratch-writing
 # query (the bucketed LSH index build, format round-trips, streaming
 # checkpoints) with the same variance session.py measured for shuffle
-# spill. Overridable via SPARK_GRAFT_SCRATCH_DIR; falls back to the
-# repo-local directory when /dev/shm is absent. A real cluster stages
-# this on per-application HDFS/S3 temp prefixes (module docstring).
+# spill. Overridable via SPARK_GRAFT_SCRATCH_DIR; falls back to
+# <checkout>/.scratch-<uid> when /dev/shm is absent. A real cluster
+# stages this on per-application HDFS/S3 temp prefixes (module
+# docstring).
 #
 # r14 (ADVICE + verdict what's-wrong #2):
-# - the default is PER-UID (…-<uid>): the old world-shared path was
-#   created 0755 by its first owner, so a second uid's makedirs failed;
+# - both defaults are PER-UID (…-<uid>): a world-shared path is
+#   created 0755 by its first owner, so a second uid's makedirs fails;
 # - tmpfs is RAM (typically capped at 50% of it) and now holds
 #   full-table parquet staging — the free-space guard below routes
 #   scratch back to the repo disk when /dev/shm has less headroom than
@@ -51,7 +52,8 @@ def _default_root() -> str:
         except OSError:
             pass
     return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        f".scratch-{os.getuid()}",
     )
 
 

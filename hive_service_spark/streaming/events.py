@@ -25,11 +25,12 @@ from pathlib import Path
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from hive_service_spark import catalog
-from hive_service_spark.registry import query
+from hive_service_spark.registry import query, release_stream_bus
 
 # Checkpoints and foreachBatch sink targets are mutable state a
 # streaming query owns exclusively — they live in the per-process
@@ -77,28 +78,15 @@ def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-class _state_partitions:
-    """Pin spark.sql.shuffle.partitions to the session's parallelism
-    for the duration of one streaming run. AQE is disabled in stateful
-    streaming, so a stateful operator materializes the FULL configured
-    partition count as state-store instances per micro-batch — under
-    the plain 200-partition default that is 200 state commits per batch
-    for a local[8] run. The checkpoint is recreated per invocation, so
-    the count is safe to change between runs; on a cluster this knob is
-    sized to the executor count the same way."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(self.spark.sparkContext.defaultParallelism),
-        )
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+def await_stream(q: StreamingQuery) -> None:
+    """Wait for an availableNow stream to end. Spark runs each stream
+    on its own clone of the starting session; a stateful stream makes
+    that clone's streaming manager, whose listener bus would stay on
+    the SparkContext for good, so it is released here."""
+    try:
+        q.awaitTermination()
+    finally:
+        release_stream_bus(q._jsq.streamingQuery().sparkSessionForStream())
 
 
 def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
@@ -107,22 +95,25 @@ def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
     import shutil
 
     spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     # each invocation replays the full input from offset 0 — a stale
     # checkpoint would pin the old source/offsets, so start clean
     shutil.rmtree(f"{_CKPT}/{name}", ignore_errors=True)
-    with _state_partitions(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", f"{_CKPT}/{name}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # AQE is off in stateful streaming, so each configured shuffle
+    # partition is a state-store instance committed per micro-batch:
+    # one per core, not the 200 default. The checkpoint is recreated
+    # per invocation, so the count is safe to change between runs.
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", f"{_CKPT}/{name}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
     return spark.table(name)
 
 
@@ -456,15 +447,18 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(target)
 
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(_write_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # one state-store instance per core (see _run_to_table)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    q = (
+        agg.writeStream.foreachBatch(_write_batch)
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
     return spark.read.parquet(target)
 
 
@@ -547,14 +541,17 @@ def stream_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
         state["cur"] = nxt
         state["batches"] += 1
 
-    with _state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # one state-store instance per core (see _run_to_table)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    q = (
+        stream.writeStream.foreachBatch(_merge_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
     assert state["batches"] >= 2, (
         f"expected multiple micro-batches, got {state['batches']} — "
         "incrementality untested"

@@ -42,7 +42,11 @@ from hive_service_spark.llm.classify import _LOGREG_SERVED_ORACLE
 from hive_service_spark.registry import persisted, query
 from hive_service_spark.scratch import SCRATCH_ROOT as _SCRATCH
 from hive_service_spark.scratch import pid_dir, stage_source
-from hive_service_spark.streaming.events import _CKPT, _run_to_table, _state_partitions
+from hive_service_spark.streaming.events import (
+    _CKPT,
+    _run_to_table,
+    await_stream,
+)
 
 _SINKS = f"{pid_dir('proc')}/ingest_sinks"
 
@@ -77,26 +81,26 @@ def _run_stateless_ingest(stream_df: DataFrame, name: str, decide) -> DataFrame:
 
     spark = stream_df.sparkSession
     sink = f"{_SINKS}/{name}"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     # full replay per invocation, like _run_to_table: stale checkpoint
     # or sink would pin old offsets / duplicate old decision rows
     shutil.rmtree(f"{_CKPT}/{name}", ignore_errors=True)
     shutil.rmtree(sink, ignore_errors=True)
-    with _state_partitions(spark):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                lambda bdf, bid: decide(bdf)
-                .write.mode("overwrite")
-                .parquet(f"{sink}/batch_id={bid}")
-            )
-            .queryName(name)
-            .option("checkpointLocation", f"{_CKPT}/{name}")
-            .trigger(availableNow=True)
-            .start()
+    # one state-store instance per core (see events._run_to_table)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    q = (
+        stream_df.writeStream.foreachBatch(
+            lambda bdf, bid: decide(bdf)
+            .write.mode("overwrite")
+            .parquet(f"{sink}/batch_id={bid}")
         )
-        q.awaitTermination()
+        .queryName(name)
+        .option("checkpointLocation", f"{_CKPT}/{name}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
     if not Path(sink).exists():
         # zero micro-batches fired (empty landing dir): the contract is
         # still the decision schema, just with no rows

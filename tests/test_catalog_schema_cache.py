@@ -66,6 +66,36 @@ def test_second_load_starts_no_job_and_plans_the_same_scan(spark, tmp_path):
     assert P.read_schemas(second) == P.read_schemas(first) == P.read_schemas(bare)
 
 
+def test_sessions_with_other_settings_keep_their_own_entries(spark, tmp_path):
+    """Per-query session copies differ in nanosAsLong (set by loading
+    events); alternating between them must not re-infer a file's schema
+    on every switch."""
+    _copy_tables(tmp_path, "nation")
+    nanos = spark.newSession()
+    nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _, n_plain = _jobs(spark, lambda: catalog.load(spark, str(tmp_path), "nation"))
+    _, n_nanos = _jobs(nanos, lambda: catalog.load(nanos, str(tmp_path), "nation"))
+    _, n_again = _jobs(spark, lambda: catalog.load(spark, str(tmp_path), "nation"))
+    _, n_nanos_again = _jobs(nanos, lambda: catalog.load(nanos, str(tmp_path), "nation"))
+    assert (n_plain, n_nanos, n_again, n_nanos_again) == (1, 1, 0, 0)
+
+
+def test_staged_partition_layout_warm_build_starts_no_job(spark):
+    """part_*_partition_pruning build their month-partitioned frame on
+    every call, in the calling session: once staged, the build reads
+    the cached schema and lists the partition directories on the
+    driver, so it starts no Spark job."""
+    from hive_service_spark.operators.partition_pruning import (
+        staged_lineitem_by_month,
+    )
+    from tests.conftest import SF_DIR
+
+    staged_lineitem_by_month(spark, SF_DIR)
+    df, n_jobs = _jobs(spark, lambda: staged_lineitem_by_month(spark, SF_DIR))
+    assert n_jobs == 0
+    assert "ship_month" in df.columns
+
+
 def test_rewritten_file_is_reinferred(spark, tmp_path):
     path = tmp_path / "region.parquet"
     pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}), path)

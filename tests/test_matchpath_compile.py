@@ -1042,22 +1042,6 @@ def test_npath_sql_matches_dataframe_operator(spark):
     assert got == exp and got  # non-empty and identical
 
 
-def test_npath_udtf_buffer_guard(monkeypatch):
-    """The demo UDTF refuses a partition past its buffer guard with an
-    error naming the bounded surfaces (round 11: no silent unbounded
-    Python buffering)."""
-    import hive_service_spark.operators.matchpath as mp
-
-    monkeypatch.setattr(mp, "_NPATH_UDTF_MAX_ROWS", 3)
-    cls = mp._npath_udtf("view.view*.purchase", ["view", "purchase"]).func
-    inst = cls()
-    row = {"user_id": 1, "ts": 0, "event_type": "view"}
-    for _ in range(3):
-        inst.eval(row)
-    with pytest.raises(RuntimeError, match="MAXROWS"):
-        inst.eval(row)
-
-
 def test_automaton_group_carry_across_arrow_batches(spark):
     """Round 11: the mapInPandas automaton slices key groups inside
     each Arrow batch and CARRIES a boundary-straddling group into the

@@ -61,18 +61,23 @@ import os
 LOG = os.path.join(os.path.dirname(os.path.abspath(__file__)), "calls.log")
 
 
-def _log(tag):
+KEY = "spark.graft.test.ab_variant"
+
+
+def _log(spark, tag):
+    # "!" marks a call that saw a conf an earlier call set
     with open(LOG, "a") as f:
-        f.write(tag)
+        f.write(tag if spark.conf.get(KEY, None) is None else "!")
+    spark.conf.set(KEY, tag)
 
 
 def a(spark, sf_dir):
-    _log("a")
+    _log(spark, "a")
     return spark.range(5).selectExpr("id", "id / 3.0D AS r")
 
 
 def b(spark, sf_dir):
-    _log("b")
+    _log(spark, "b")
     # same answer, other order and float noise well inside 1e-6
     return spark.range(5).orderBy("id", ascending=False).selectExpr(
         "id", "id / 3.0D + 1e-9D AS r"
@@ -80,7 +85,7 @@ def b(spark, sf_dir):
 
 
 def wrong(spark, sf_dir):
-    _log("w")
+    _log(spark, "w")
     return spark.range(5).selectExpr("id", "id / 3.0D + 1e-3D AS r")
 """
 
@@ -90,9 +95,12 @@ def test_ab_file_variants_abba_schedule_and_json(spark, tmp_path):
     variants.write_text(textwrap.dedent(_VARIANTS))
     rec = ab.ab(spark, f"{variants}:a", f"{variants}:b", sf_dir=str(tmp_path))
     calls = (tmp_path / "calls.log").read_text()
-    # answers, one warmup each, then ALTERNATIONS pairs in ABBA order
+    # answers, one warmup each, then ALTERNATIONS pairs in ABBA order;
+    # every call runs in its own session copy (registry.run), so no
+    # call sees a conf another one set, and the caller sees none
     schedule = "".join("ab" if i % 2 == 0 else "ba" for i in range(ab.ALTERNATIONS))
     assert calls == "ab" + "ab" + schedule
+    assert spark.conf.get("spark.graft.test.ab_variant", None) is None
     assert set(rec) == {
         "a",
         "b",

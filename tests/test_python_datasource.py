@@ -27,17 +27,23 @@ def test_one_partition_per_file(spark):
     """The reader enumerates one InputPartition per data file, so the
     4-file layout scans as 4 parallel tasks — a real InputFormat
     split, not a single-threaded Python loop."""
-    df = _SPECS["source_python_datasource"].fn(spark, SF_DIR)
-    # count the scan's partitions via the RDD of the raw read
-    import hive_service_spark.sources.python_datasource as pds
+    _SPECS["source_python_datasource"].fn(spark, SF_DIR)
+    # count the scan's partitions via the RDD of the raw read; the
+    # query registered the source in its own session copy, not here
     from hive_service_spark.scratch import pid_dir
+    from hive_service_spark.sources.python_datasource import FixedWidthDataSource
 
-    raw = (
-        spark.read.format("fixedwidth")
-        .option("path", f"{pid_dir('pyds')}/orders_fixedwidth")
-        .load()
-    )
-    assert raw.rdd.getNumPartitions() == 4
+    spark.dataSource.register(FixedWidthDataSource)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        raw = (
+            spark.read.format("fixedwidth")
+            .option("path", f"{pid_dir('pyds')}/orders_fixedwidth")
+            .load()
+        )
+        assert raw.rdd.getNumPartitions() == 4
+    finally:
+        spark.conf.unset("spark.sql.python.filterPushdown.enabled")
 
 
 def test_docstream_cache_invalidates_on_same_tick_rewrite(tmp_path):
@@ -152,6 +158,8 @@ def test_fixed_width_pads_short_status(spark, tmp_path):
     )
 
     spark.dataSource.register(FixedWidthSinkSource)
+    # the reader implements pushFilters, which needs the pushdown flag
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     d = str(tmp_path / "sink3")
     df = spark.createDataFrame(
         [(1, "", "10.00", "5-LOW")],
@@ -167,8 +175,9 @@ def test_fixed_width_pads_short_status(spark, tmp_path):
     df.write.format("fixedwidthsink").option("path", d).mode(
         "append"
     ).save()
-    back = (
-        spark.read.format("fixedwidthsink").option("path", d).load()
-    )
-    rows = back.collect()
+    try:
+        back = spark.read.format("fixedwidthsink").option("path", d).load()
+        rows = back.collect()
+    finally:
+        spark.conf.unset("spark.sql.python.filterPushdown.enabled")
     assert len(rows) == 1 and rows[0].o_orderkey == 1

@@ -15,6 +15,20 @@ def test_pid_dir_is_per_process_and_created():
     assert os.path.isdir(d)
 
 
+def test_disk_fallback_is_per_uid(monkeypatch):
+    """Without tmpfs headroom the root falls back to the checkout,
+    suffixed with the uid like the tmpfs default, so a second uid never
+    tries to write into a directory the first one created."""
+
+    def tight(path):
+        return shutil._ntuple_diskusage(1 << 30, 1 << 30, 0)
+
+    monkeypatch.setattr(scratch.shutil, "disk_usage", tight)
+    root = scratch._default_root()
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(scratch.__file__)))
+    assert root == os.path.join(checkout, f".scratch-{os.getuid()}")
+
+
 def test_reaper_removes_dead_keeps_alive_and_foreign(tmp_path, monkeypatch):
     root = tmp_path / "scratch"
     root.mkdir()

@@ -52,8 +52,8 @@ def test_sql_udf_shims_match_python_shims(spark):
     """Every SQL-UDF shim evaluated from SQL text must equal the
     Python Column helper on the same inputs (incl. the DEFAULT n=4
     arity the Hive UDFs expose)."""
-    register_sql_shims(spark)
-    got = spark.sql(
+    got = hive_sql(
+        spark,
         """
         SELECT mask_first_n('Ab1cdEF', 3) AS mf,
                mask_first_n('Ab1cdEF') AS mf_def,
@@ -183,6 +183,37 @@ def test_sort_array_by_sql_matches_python(spark):
         """,
     ).collect()[0]
     assert got.vs == [30, 20, 10]
+
+
+def test_only_named_shims_are_registered(spark, monkeypatch):
+    """A registered query runs in a fresh copy of its caller's session,
+    so a statement pays only for the SQL-UDF shims it names:
+    fn_shims_sql_url_tuple uses only the parse_url_tuple macro and runs
+    no CREATE TEMPORARY FUNCTION, and a statement calling one shim
+    creates that one."""
+    from pyspark.sql import SparkSession
+
+    from hive_service_spark.registry import load_all
+    from tests.conftest import SF_DIR
+
+    statements = []
+    sql = SparkSession.sql
+
+    def recording(self, sqlQuery, *args, **kwargs):
+        statements.append(sqlQuery)
+        return sql(self, sqlQuery, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", recording)
+    load_all()["fn_shims_sql_url_tuple"].fn(spark, SF_DIR).collect()
+    assert statements and not [
+        s for s in statements if "TEMPORARY FUNCTION" in s.upper()
+    ]
+
+    statements.clear()
+    session = spark.newSession()
+    hive_sql(session, "SELECT mask_hash('a') AS h").collect()
+    ddl = [s for s in statements if "TEMPORARY FUNCTION" in s.upper()]
+    assert len(ddl) == 1 and "mask_hash" in ddl[0]
 
 
 def test_run_script_expands_shims(spark):
@@ -477,10 +508,11 @@ class TestRound13ReviewFixes:
     def test_register_sql_shims_memoized(self, spark):
         import time as _t
 
-        register_sql_shims(spark)  # ensure registered
+        every = " ".join(f"{name}(x)" for name in _SQL_UDF_DEFS)
+        register_sql_shims(spark, every)  # ensure registered
         t0 = _t.perf_counter()
         for _ in range(10):
-            register_sql_shims(spark)
+            register_sql_shims(spark, every)
         dt = _t.perf_counter() - t0
         # 10 probes must be far cheaper than 10x14 DDL round-trips
         assert dt < 2.0, dt

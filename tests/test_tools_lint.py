@@ -10,12 +10,21 @@ Rule 2: no ``.py`` file under ``hive_service_spark/``, ``tools/`` or
 ``tests/``, nor ``bench.py``, names the absolute checkout path. A copy
 of the tree (an A/B checkout) would otherwise import, run or write
 into the original; derive paths from ``__file__``.
+
+Rule 3: no module in ``registry._QUERY_MODULES`` calls
+``<x>.conf.set`` or ``<x>.conf.unset`` inside a ``finally:`` block or
+an ``__exit__`` method. A registered query runs in its own copy of the
+caller's session (``registry.run``), so it sets what it needs and
+leaves it set; a hand-written restore is dead weight, and one that
+races a concurrent peer's read is a bug.
 """
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
+
+from hive_service_spark.registry import _QUERY_MODULES
 
 ROOT = Path(__file__).resolve().parent.parent
 # spelled in parts so this file does not match itself
@@ -105,3 +114,73 @@ def test_no_fixed_checkout_path():
         f"hard-coded {_CHECKOUT_PATH}: a copy of the tree would use the "
         f"original; derive the path from __file__: {bad}"
     )
+
+
+def _is_conf_write(call: ast.Call) -> bool:
+    """``<x>.conf.set(...)`` or ``<x>.conf.unset(...)``."""
+    f = call.func
+    return (
+        isinstance(f, ast.Attribute)
+        and f.attr in ("set", "unset")
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "conf"
+    )
+
+
+def conf_restores(source: str) -> list[int]:
+    """Lines of conf writes inside a ``finally:`` block or an
+    ``__exit__`` method."""
+    scopes: list[ast.AST] = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Try):
+            scopes += node.finalbody
+        elif isinstance(node, ast.FunctionDef) and node.name == "__exit__":
+            scopes.append(node)
+    return sorted(
+        {
+            n.lineno
+            for scope in scopes
+            for n in ast.walk(scope)
+            if isinstance(n, ast.Call) and _is_conf_write(n)
+        }
+    )
+
+
+def test_query_modules_restore_no_session_conf():
+    bad = []
+    for mod in _QUERY_MODULES:
+        path = ROOT / (mod.replace(".", "/") + ".py")
+        bad += [
+            f"{path.relative_to(ROOT)}:{line}"
+            for line in conf_restores(path.read_text())
+        ]
+    assert not bad, (
+        "a registered query runs in its own session copy; set the conf "
+        f"and leave it set: {bad}"
+    )
+
+
+def test_conf_restore_lint_detects_restores():
+    """Self-test: flags conf writes in finally blocks and __exit__,
+    passes plain sets and other ``.set`` calls."""
+    src = '''
+def query(spark):
+    prev = spark.conf.get("k")
+    spark.conf.set("k", "v")
+    try:
+        return spark.sql("SELECT 1")
+    finally:
+        spark.conf.set("k", prev)
+
+class pinned:
+    def __exit__(self, *exc):
+        self.spark.conf.unset("k")
+
+def ok(spark, state):
+    spark.conf.set("k", "v")
+    try:
+        pass
+    finally:
+        state.set("done")
+'''
+    assert conf_restores(src) == [8, 12]

@@ -6,7 +6,9 @@ A variant is a registered query name or `path/to/file.py:function`,
 a function `(spark, sf_dir) -> DataFrame`; the file form lets a shape
 that is not registered (say, an older join order taken from git
 history) be measured against the registered one. Both run at
-`bench.SF_DIR`.
+`bench.SF_DIR`, and both run through `registry.run`, each call in its
+own copy of the session, so a variant's conf writes never reach the
+other side.
 
 Before timing, both answers are collected and compared as sorted rows,
 floats within 1e-6 (two join orders accumulate double sums in
@@ -32,7 +34,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import SF_DIR, measure  # noqa: E402
-from hive_service_spark.registry import load_all  # noqa: E402
+from hive_service_spark.registry import load_all, run  # noqa: E402
 from hive_service_spark.session import get_session  # noqa: E402
 
 # ten pairs: the fewest on which a 9-of-10 win rule can be applied
@@ -49,7 +51,7 @@ def resolve(variant: str):
         )
         module = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(module)
-        return getattr(module, fn_name)
+        return functools.partial(run, getattr(module, fn_name))
     specs = load_all()
     if variant not in specs:
         raise SystemExit(f"ab.py: {variant!r} is neither registered nor file.py:fn")
