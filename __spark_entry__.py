@@ -15,10 +15,9 @@ from hive_service_spark.registry import load_all
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query (TPC-H Q1 shape) on /root/testdata/sf0.001."""
-    from hive_service_spark.operators.tpch import q1_pricing_summary
-
-    return q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    """Flagship query (TPC-H Q1 shape) on /root/testdata/sf0.001, run
+    as a registered query: in its own copy of ``spark``."""
+    return load_all()["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

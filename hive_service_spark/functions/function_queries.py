@@ -13,7 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import load, register_views
+from hive_service_spark import catalog
+from hive_service_spark.catalog import load
 from hive_service_spark.functions import hive_compat as hc
 from hive_service_spark.registry import query
 
@@ -444,9 +445,7 @@ def func_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     expr`. Like Hive macros these inline into the plan (Catalyst sees
     the expression, so codegen/pushdown still apply — NOT a Python UDF
     round-trip; the hot path stays JVM-side at any scale)."""
-    from hive_service_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE)
@@ -495,7 +494,7 @@ def func_python_udf_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB note: this is the SLOW path (pickled Python per row) — real
     deployments use pandas_udf (Arrow) like llm/multimodal.py; tiny
     dim table here, so the demo is harmless."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "region")
     spark.udf.register("py_reverse", lambda s: s[::-1] if s else None, "string")
     spark.udf.register(
         "py_vowels",

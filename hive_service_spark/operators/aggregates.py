@@ -15,6 +15,13 @@ per input row. Multi-distinct triggers Catalyst's Expand, which
 multiplies shuffle rows by the distinct-column count: acceptable, same
 plan Hive generates. collect_list/set are bounded-group ops — only used
 on low-cardinality groups by design.
+
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query. Entries whose text
+Spark does not run as it stands, or plans differently from their
+DataFrame code, keep that code. So do the sketch and observation
+entries, whose Spark side computes more than their text.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -42,17 +50,7 @@ FROM lineitem
 @query("agg_global", oracle=_GLOBAL_ORACLE)
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global (no GROUP BY) aggregation — single-group HashAggregate."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("l_partkey").alias("n_partkey"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.min("l_quantity").alias("min_qty"),
-        F.max("l_quantity").alias("max_qty"),
-        F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-        F.min("l_shipdate").alias("first_ship"),
-        F.max("l_shipdate").alias("last_ship"),
-    )
+    return catalog.sql(spark, sf_dir, _GLOBAL_ORACLE)
 
 
 _DISTINCT_ORACLE = """
@@ -89,10 +87,10 @@ _ROLLUP_ORACLE = """
 SELECT
   o_orderstatus,
   o_orderpriority,
-  GROUPING(o_orderstatus)   AS g_status,
-  GROUPING(o_orderpriority) AS g_prio,
-  COUNT(*)                  AS n_orders,
-  ROUND(SUM(o_totalprice), 2) AS total
+  CAST(GROUPING(o_orderstatus) AS INT)   AS g_status,
+  CAST(GROUPING(o_orderpriority) AS INT) AS g_prio,
+  COUNT(*)                               AS n_orders,
+  ROUND(SUM(o_totalprice), 2)            AS total
 FROM orders
 GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 """
@@ -103,22 +101,16 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with GROUPING() markers (reference grouping-sets path in
     GroupByOperator; GROUPING__ID bit-order normalized via per-column
     grouping() instead — SURVEY.md §7 hard parts)."""
-    o = load(spark, sf_dir, "orders")
-    return o.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.grouping("o_orderstatus").cast("int").alias("g_status"),
-        F.grouping("o_orderpriority").cast("int").alias("g_prio"),
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
+    return catalog.sql(spark, sf_dir, _ROLLUP_ORACLE)
 
 
 _CUBE_ORACLE = """
 SELECT
   l_returnflag,
   l_linestatus,
-  GROUPING(l_returnflag) AS g_flag,
-  GROUPING(l_linestatus) AS g_status,
-  COUNT(*)               AS n_items
+  CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
+  CAST(GROUPING(l_linestatus) AS INT) AS g_status,
+  COUNT(*)                            AS n_items
 FROM lineitem
 GROUP BY CUBE(l_returnflag, l_linestatus)
 """
@@ -127,12 +119,7 @@ GROUP BY CUBE(l_returnflag, l_linestatus)
 @query("agg_cube", oracle=_CUBE_ORACLE)
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dimensions."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.grouping("l_returnflag").cast("int").alias("g_flag"),
-        F.grouping("l_linestatus").cast("int").alias("g_status"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
+    return catalog.sql(spark, sf_dir, _CUBE_ORACLE)
 
 
 _GSETS_ORACLE = """
@@ -149,19 +136,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 @query("agg_grouping_sets", oracle=_GSETS_ORACLE)
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (SQL form — Spark SQL supports verbatim)."""
-    o = load(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("_gsets_orders")
-    return spark.sql(
-        """
-        SELECT
-          o_orderstatus,
-          o_orderpriority,
-          COUNT(*)                    AS n_orders,
-          ROUND(AVG(o_totalprice), 4) AS avg_price
-        FROM _gsets_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
+    return catalog.sql(spark, sf_dir, _GSETS_ORACLE)
 
 
 _STATS_ORACLE = """
@@ -185,21 +160,7 @@ GROUP BY l_returnflag
 def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance/stddev/covariance/correlation families (GenericUDAF
     Variance/Std/Covariance/Correlation) + skew/kurtosis extension."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.var_pop("l_quantity"), 4).alias("var_pop_qty"),
-        F.round(F.var_samp("l_quantity"), 4).alias("var_samp_qty"),
-        F.round(F.stddev_pop("l_quantity"), 4).alias("std_pop_qty"),
-        F.round(F.stddev_samp("l_quantity"), 4).alias("std_samp_qty"),
-        F.round(F.covar_pop("l_quantity", "l_extendedprice"), 2).alias("covar_pop_qp"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
-            "covar_samp_qp"
-        ),
-        # "+ 0.0" collapses IEEE -0.0 to 0.0 on both engines (repr-strict hash)
-        (F.round(F.corr("l_quantity", "l_extendedprice"), 4) + 0.0).alias("corr_qp"),
-        (F.round(F.skewness("l_quantity"), 4) + 0.0).alias("skew_qty"),
-        (F.round(F.kurtosis("l_quantity"), 4) + 0.0).alias("kurt_qty"),
-    )
+    return catalog.sql(spark, sf_dir, _STATS_ORACLE)
 
 
 _REGR_ORACLE = """
@@ -222,19 +183,7 @@ GROUP BY l_returnflag
 @query("agg_regression", oracle=_REGR_ORACLE)
 def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All nine regr_* aggregates (GenericUDAFBinarySetFunctions)."""
-    li = load(spark, sf_dir, "lineitem")
-    y, x = F.col("l_extendedprice"), F.col("l_quantity")
-    return li.groupBy("l_returnflag").agg(
-        F.regr_count(y, x).alias("r_count"),
-        F.round(F.regr_avgx(y, x), 4).alias("r_avgx"),
-        F.round(F.regr_avgy(y, x), 4).alias("r_avgy"),
-        F.round(F.regr_slope(y, x), 4).alias("r_slope"),
-        F.round(F.regr_intercept(y, x), 4).alias("r_intercept"),
-        F.round(F.regr_r2(y, x), 6).alias("r_r2"),
-        F.round(F.regr_sxx(y, x), 2).alias("r_sxx"),
-        F.round(F.regr_syy(y, x), 2).alias("r_syy"),
-        F.round(F.regr_sxy(y, x), 2).alias("r_sxy"),
-    )
+    return catalog.sql(spark, sf_dir, _REGR_ORACLE)
 
 
 _PCTL_ORACLE = """
@@ -322,8 +271,8 @@ GROUP BY o_orderstatus
 @query("agg_min_max_by", oracle=_ARGMINMAX_ORACLE)
 def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by/min_by (arg-max) — Spark 3.3+ builtins. The ordering
-    value is the (price, orderkey) STRUCT, not the bare price
-    (round-13 review): max_by's tie-break is unspecified in both
+    value is the (price, orderkey) STRUCT, not the bare price:
+    max_by's tie-break is unspecified in both
     engines, so two orders tying at a group's max price could return
     different keys per engine on regenerated data; the struct makes
     the ordering total (Spark compares structs lexicographically;
@@ -392,7 +341,7 @@ def agg_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the rank bracket [percentile(0.499), percentile(0.501)] —
     10× the default 1e-4 rank-error bound; a plain value tolerance
     against the interpolated exact median would flip whenever the
-    median rank lands between two distinct values (round-3 advice);
+    median rank lands between two distinct values;
     histogram_numeric bin weights must sum to the row count exactly and
     the weighted centroid mean must sit within ±5% of the true mean
     (NumericHistogram invariants — reference
@@ -725,87 +674,7 @@ def agg_ols_normal_equations(
     moments outgrow 2^53 — the deployment note is to keep the sums in
     DECIMAL(38,0) (both engines) or accept last-ulp slack; the plan
     shape is unchanged."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.round("l_quantity", 0).cast("bigint").alias("x1"),
-        F.round(F.col("l_discount") * 100, 0).cast("bigint").alias("x2"),
-        F.round("l_extendedprice", 0).cast("bigint").alias("y"),
-    )
-    m = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").cast("double").alias("sx1"),
-        F.sum("x2").cast("double").alias("sx2"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
-        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
-    n, sx1, sx2 = F.col("n"), F.col("sx1"), F.col("sx2")
-    sy, s1y, s2y = F.col("sy"), F.col("s1y"), F.col("s2y")
-    s11, s12, s22, syy = (
-        F.col("s11"),
-        F.col("s12"),
-        F.col("s22"),
-        F.col("syy"),
-    )
-    det = (
-        n * (s11 * s22 - s12 * s12)
-        - sx1 * (sx1 * s22 - s12 * sx2)
-        + sx2 * (sx1 * s12 - s11 * sx2)
-    )
-    det0 = (
-        sy * (s11 * s22 - s12 * s12)
-        - sx1 * (s1y * s22 - s12 * s2y)
-        + sx2 * (s1y * s12 - s11 * s2y)
-    )
-    det1 = (
-        n * (s1y * s22 - s12 * s2y)
-        - sy * (sx1 * s22 - s12 * sx2)
-        + sx2 * (sx1 * s2y - s1y * sx2)
-    )
-    det2 = (
-        n * (s11 * s2y - s1y * s12)
-        - sx1 * (sx1 * s2y - s1y * sx2)
-        + sy * (sx1 * s12 - s11 * sx2)
-    )
-    solved = m.select(
-        "l_returnflag",
-        "n_rows",
-        "n",
-        "sy",
-        "s1y",
-        "s2y",
-        "syy",
-        det.alias("det"),
-        det0.alias("det0"),
-        det1.alias("det1"),
-        det2.alias("det2"),
-    )
-    b0 = F.col("det0") / F.col("det")
-    b1 = F.col("det1") / F.col("det")
-    b2 = F.col("det2") / F.col("det")
-    return solved.select(
-        "l_returnflag",
-        "n_rows",
-        F.round(b0, 6).alias("b0"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(
-            1.0
-            - (
-                F.col("syy")
-                - b0 * F.col("sy")
-                - b1 * F.col("s1y")
-                - b2 * F.col("s2y")
-            )
-            / (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")),
-            6,
-        ).alias("r2"),
-    ).orderBy("l_returnflag")
+    return catalog.sql(spark, sf_dir, _OLS_ORACLE)
 
 
 # ---------------------------------------------------------------------------

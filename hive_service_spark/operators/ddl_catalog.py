@@ -23,7 +23,8 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import load, register_views
+from hive_service_spark import catalog
+from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 from hive_service_spark.scratch import pid_dir, warehouse_dir
 
@@ -55,7 +56,7 @@ def ddl_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE TABLE AS SELECT, then INSERT INTO appends a second slice;
     the aggregate over the final table must equal the UNION ALL oracle —
     proving both the CTAS write and the append."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     _fresh_table(spark, "li_slice")
     spark.sql(
         """
@@ -95,7 +96,7 @@ def ddl_nested_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE VIEW stacking (view over view over base tables) — the
     reference's logical-view surface; Catalyst sees through both layers
     to the base scans (predicate pushdown intact)."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "customer", "nation")
     spark.sql(
         """
         CREATE OR REPLACE TEMP VIEW rich_customers AS
@@ -143,7 +144,6 @@ def ddl_dynamic_partition_overwrite(
     partition overwrite semantics via
     spark.sql.sources.partitionOverwriteMode=dynamic. The per-year
     aggregate proves exactly one partition changed."""
-    register_views(spark, sf_dir)
     _fresh_table(spark, "orders_part")
     o = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("bigint")
@@ -249,7 +249,7 @@ def ddl_show_describe_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same stats from the data. Catalog introspection is inherently
     driver-side and bounded (one DESCRIBE per column of one table), so
     the collect here is contract-bounded, not a data-path collect."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "nation")
     _fresh_table(spark, "stats_demo")
     spark.sql(
         """
@@ -392,7 +392,7 @@ def ddl_explain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     many table scans, did column pruning reach the fact scan, is the
     aggregate hash-based — each a deterministic boolean the oracle pins
     as a literal. The same facts Hive users grep EXPLAIN output for."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "customer", "nation")
     sql = (
         "SELECT n_name, count(*) AS n FROM customer "
         "JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name"
@@ -443,7 +443,7 @@ def ddl_stats_only_answering(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard: stats answered this way are only valid when the catalog is
     not stale — the ANALYZE runs in the same 'transaction' here, which
     is exactly Hive's StatsTask-after-write discipline."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "orders")
     _fresh_table(spark, "stats_orders")
     spark.sql(
         """
@@ -517,7 +517,7 @@ def ddl_constraints_informational(spark: SparkSession, sf_dir: str) -> DataFrame
     one groupBy, the FK orphan check an anti-join probe whose strategy
     is AQE's size-based call (broadcast at test scale; at 100 TB the
     sf-scaled keyset shuffles — no forced hint)."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "orders")
     _fresh_table(spark, "orders_fk")
     spark.sql(
         """
@@ -619,7 +619,6 @@ def ddl_policy_masked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost nothing beyond the scan they restrict."""
     from hive_service_spark.functions import hive_compat as hc
 
-    register_views(spark, sf_dir)
     c = load(spark, sf_dir, "customer")
     policy = (
         c.where(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
@@ -718,8 +717,9 @@ def ddl_role_grants_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just catalog strings. Scale: the role catalog is metadata
     (tens of rows — the recursion depth is the DAG height); only the
     four COUNT(*) probes touch data, each a stats-answerable scan."""
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         _ROLE_GRANTS_SQL.format(
             customer="customer", orders="orders", lineitem="lineitem",
             nation="nation",
@@ -755,7 +755,6 @@ def ddl_partition_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer counts. Scale: drops are metadata ops + O(dropped-partition) file
     deletes; the verification aggregate scans only surviving
     partitions (partition pruning on the rebuilt table)."""
-    register_views(spark, sf_dir)
     _fresh_table(spark, "orders_ret")
     o = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("bigint")
@@ -829,7 +828,6 @@ def ddl_exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query raises if main already has the partition. Output: main's
     per-year rollup after the exchange (1997 must carry restated
     prices) plus staging's remaining-row count, which must be ZERO."""
-    register_views(spark, sf_dir)
     _fresh_table(spark, "orders_xmain")
     _fresh_table(spark, "orders_xstage")
     o = load(spark, sf_dir, "orders").select(
@@ -929,7 +927,7 @@ def ddl_show_create_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: SHOW CREATE TABLE is a metadata-only operation at any
     table size; the round-trip proves the emitted DDL is executable —
     the property replication tooling depends on."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "orders")
     _fresh_table(spark, "sct_src")
     _fresh_table(spark, "sct_clone")
     spark.sql(

@@ -32,7 +32,8 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import load, register_views
+from hive_service_spark import catalog
+from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 from hive_service_spark.scratch import pid_dir, warehouse_dir
 
@@ -66,7 +67,7 @@ def ddl_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks (the reference's ForwardOperator→FileSink×2 plan). Spark SQL
     supports the statement natively. The verification aggregate reads
     both sinks back; at 100 TB this halves scan cost vs two jobs."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     _fresh_table(spark, "mi_hi")
     _fresh_table(spark, "mi_lo")
     spark.sql(
@@ -126,7 +127,7 @@ def ddl_update_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     v3 = v2 after `UPDATE o_totalprice*=0.9 WHERE o_orderpriority LIKE
     '1-%'`. At 100 TB you'd scope the rewrite to affected partitions
     (dynamic partition overwrite) or use Delta/Iceberg ACID."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "orders")
     for t in ("orders_v1", "orders_v2", "orders_v3"):
         _fresh_table(spark, t)
     spark.sql(
@@ -179,7 +180,6 @@ def ddl_export_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     Export/ImportSemanticAnalyzer replication surface. The aggregate
     over the imported table must match the oracle over the original,
     proving schema + data survived the round-trip."""
-    register_views(spark, sf_dir)
     export_dir = f"{pid_dir()}/export_customer"
     shutil.rmtree(export_dir, ignore_errors=True)
 
@@ -256,7 +256,7 @@ def ddl_materialized_view_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream queries target directly (InMemoryRelation replaces the
     rescan; on a cluster the cache is partitioned across executors).
     The outer roll-up reads the cached MV, not base lineitem."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     spark.sql("UNCACHE TABLE IF EXISTS supplier_rev_mv")
     spark.sql(
         """

@@ -6,8 +6,14 @@ NOT EXISTS decorrelation, MapJoinOperator broadcast join, residual
 non-equi predicates on CommonJoinOperator, CrossProductCheck theta
 joins.
 
-Scale notes: dims (nation/region/supplier at fixed cardinality) are
-explicitly broadcast — at 100 TB the fact-side scan never shuffles for
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query. A forced broadcast
+is a ``/*+ BROADCAST(t) */`` hint in the text, which DuckDB reads as a
+comment.
+
+Scale notes: only the fixed-cardinality dims (nation/region) are
+broadcast by hint — at 100 TB the fact-side scan never shuffles for
 those. Fact⋈fact joins shuffle on join keys; AQE handles skew +
 converts to broadcast when a filtered side turns out small.
 """
@@ -17,11 +23,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
 _INNER_ORACLE = """
-SELECT c_custkey, c_name, n_name
+SELECT /*+ BROADCAST(nation) */ c_custkey, c_name, n_name
 FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 WHERE c_acctbal > 7000
@@ -30,12 +37,8 @@ WHERE c_acctbal > 7000
 
 @query("join_inner_broadcast", oracle=_INNER_ORACLE)
 def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INNER equi-join with explicit broadcast of the 25-row dim."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 7000)
-    n = load(spark, sf_dir, "nation")
-    return c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
-        "c_custkey", "c_name", "n_name"
-    )
+    """INNER equi-join with a broadcast hint on the 25-row dim."""
+    return catalog.sql(spark, sf_dir, _INNER_ORACLE)
 
 
 _LEFT_ORACLE = """
@@ -50,11 +53,7 @@ WHERE c_nationkey < 5
 @query("join_left_outer", oracle=_LEFT_ORACLE)
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER: unmatched left rows null-extended (JoinDesc LEFT_OUTER=1)."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_nationkey") < 5)
-    big = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 150000)
-    return c.join(big, c.c_custkey == big.o_custkey, "left").select(
-        "c_custkey", "o_orderkey", "o_totalprice"
-    )
+    return catalog.sql(spark, sf_dir, _LEFT_ORACLE)
 
 
 _RIGHT_ORACLE = """
@@ -68,11 +67,7 @@ WHERE c_acctbal < 0
 @query("join_right_outer", oracle=_RIGHT_ORACLE)
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT OUTER (JoinDesc RIGHT_OUTER=2)."""
-    f = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    c = load(spark, sf_dir, "customer").filter(F.col("c_acctbal") < 0)
-    return f.join(c, f.o_custkey == c.c_custkey, "right").select(
-        "o_orderkey", "c_custkey", "c_name"
-    )
+    return catalog.sql(spark, sf_dir, _RIGHT_ORACLE)
 
 
 _FULL_ORACLE = """
@@ -86,11 +81,7 @@ FULL JOIN (SELECT * FROM region WHERE r_regionkey >= 2) r
 @query("join_full_outer", oracle=_FULL_ORACLE)
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER: null-extend both sides (JoinDesc FULL_OUTER=3)."""
-    n = load(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 10)
-    r = load(spark, sf_dir, "region").filter(F.col("r_regionkey") >= 2)
-    return n.join(r, n.n_regionkey == r.r_regionkey, "full").select(
-        "n_nationkey", "n_name", "r_regionkey", "r_name"
-    )
+    return catalog.sql(spark, sf_dir, _FULL_ORACLE)
 
 
 _SEMI_ORACLE = """
@@ -147,13 +138,7 @@ WHERE l_quantity >= 30
 def join_theta_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-join + non-equi residual predicate (CommonJoinOperator
     residual filters)."""
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 30)
-    p = load(spark, sf_dir, "part")
-    return li.join(
-        p,
-        (li.l_partkey == p.p_partkey)
-        & (p.p_retailprice < li.l_extendedprice / li.l_quantity),
-    ).select("l_orderkey", "l_linenumber", "p_partkey", "p_retailprice")
+    return catalog.sql(spark, sf_dir, _THETA_ORACLE)
 
 
 _CROSS_ORACLE = """
@@ -168,9 +153,7 @@ WHERE s_acctbal > 5000
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (reference CrossProductCheck path →
     BroadcastNestedLoopJoin here)."""
-    r = load(spark, sf_dir, "region")
-    s = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") > 5000)
-    return r.crossJoin(s).select("r_name", "s_suppkey")
+    return catalog.sql(spark, sf_dir, _CROSS_ORACLE)
 
 
 _SELF_ORACLE = """
@@ -186,14 +169,4 @@ WHERE a.o_totalprice > 290000 AND b.o_totalprice > 290000
 @query("join_self_pairs", oracle=_SELF_ORACLE)
 def join_self_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-join producing ordered pairs (same-table alias handling)."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 290000)
-    a, b = o.alias("a"), o.alias("b")
-    return a.join(
-        b,
-        (F.col("a.o_custkey") == F.col("b.o_custkey"))
-        & (F.col("a.o_orderkey") < F.col("b.o_orderkey")),
-    ).select(
-        F.col("a.o_orderkey").alias("first_order"),
-        F.col("b.o_orderkey").alias("later_order"),
-        F.col("a.o_custkey").alias("o_custkey"),
-    )
+    return catalog.sql(spark, sf_dir, _SELF_ORACLE)

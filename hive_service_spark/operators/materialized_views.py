@@ -37,7 +37,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from hive_service_spark.catalog import load, register_views
+from hive_service_spark import catalog
+from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
 # r14: per-pid scratch namespace via scratch.pid_dir (tmpfs-backed,
@@ -242,7 +243,7 @@ def mv_rewrite_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     case). The oracle runs the same query on the base table — matching
     values prove the rewrite is semantics-preserving. pytest pins that
     the physical plan scans the MV parquet, not base lineitem."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     mv = lineitem_revenue_mv()
     if not mv.fresh:
         mv.build(spark)
@@ -290,7 +291,7 @@ def mv_rewrite_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer from the base table, still correctly. This is the soundness
     half of the rule: an MV can only speed a query up, never change
     its answer."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     mv = lineitem_revenue_mv()
     if not mv.fresh:
         mv.build(spark)
@@ -616,7 +617,7 @@ def mv_rewrite_sql_transparent(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans lineitem_rev_mv, not lineitem). The oracle runs the original
     SQL on DuckDB, proving the rewrite is invisible to results — the
     reference's rules/views contract."""
-    register_views(spark, sf_dir)
+    catalog.bind(spark, sf_dir, "lineitem")
     mv = lineitem_revenue_mv()
     if not mv.fresh:
         mv.build(spark)

@@ -6,6 +6,12 @@ Reference parity: TableScanOperator + SelectOperator + FilterOperator
 SURVEY.md §2.7). Spark-first: every predicate is a Catalyst expression
 so it folds into the FileSourceScan as PushedFilters where the parquet
 reader supports it; projections prune the read schema.
+
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query. Entries whose text
+Spark does not run as it stands, or plans differently from their
+DataFrame code, keep that code.
 """
 
 from __future__ import annotations
@@ -13,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -31,17 +38,7 @@ WHERE l_quantity BETWEEN 10 AND 20
 @query("scan_project_filter", oracle=_PROJECT_FILTER_ORACLE)
 def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + BETWEEN/> predicates, pushed to the parquet scan."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(
-        F.col("l_quantity").between(10, 20) & (F.col("l_discount") > 0.05)
-    ).select(
-        "l_orderkey",
-        "l_linenumber",
-        # no ROUND on per-row expressions: raw IEEE arithmetic is
-        # bit-identical across engines, ROUND half-way semantics are not
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_price"),
-        "l_quantity",
-    )
+    return catalog.sql(spark, sf_dir, _PROJECT_FILTER_ORACLE)
 
 
 _IN_LIKE_ORACLE = """
@@ -61,12 +58,7 @@ def predicate_in_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_names, ECONOMY/LARGE/... p_types) so the result set is non-empty at
     every scale factor — a 0-row green verifies nothing.
     """
-    p = load(spark, sf_dir, "part")
-    return p.filter(
-        F.col("p_brand").isin("Brand#1", "Brand#3")
-        & F.col("p_name").like("%e%")
-        & ~F.col("p_type").like("SMALL%")
-    ).select("p_partkey", "p_name", "p_brand", "p_type")
+    return catalog.sql(spark, sf_dir, _IN_LIKE_ORACLE)
 
 
 _RLIKE_ORACLE = """
@@ -162,7 +154,7 @@ FROM orders
 @query("distinct_projection", oracle=_DISTINCT_ORACLE)
 def distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT (reference: GroupByOperator dedup rewrite)."""
-    return load(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()
+    return catalog.sql(spark, sf_dir, _DISTINCT_ORACLE)
 
 
 _VIRTUAL_COL_ORACLE = """

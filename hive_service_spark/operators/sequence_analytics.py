@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from hive_service_spark.catalog import load, register_views
+from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
 # --- batch sessionization (30-min inactivity gap) ---------------------------
@@ -189,7 +189,6 @@ def seq_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives, so the result (and the oracle) is exactly the plain semi
     join — while at 100 TB the probe filter drops most of the big side
     BEFORE the join shuffle, which is the entire point."""
-    register_views(spark, sf_dir)
     orders = load(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
     li = load(spark, sf_dir, "lineitem")
     # build side: every bit position set by any key, as one sorted array

@@ -7,6 +7,10 @@ has native operators), ORDER BY / SORT BY / DISTRIBUTE BY / CLUSTER BY
 (ReduceSinkOperator configs), LIMIT + TopN pushdown (TopNHash ≙
 TakeOrderedAndProject), TABLESAMPLE (bucket sampling expressed as a
 deterministic key-mod filter so both engines agree).
+
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query.
 """
 
 from __future__ import annotations
@@ -14,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -27,14 +32,7 @@ SELECT o_orderkey AS okey, 'big' AS src FROM orders WHERE o_totalprice > 280000
 @query("setop_union_all", oracle=_UNION_ALL_ORACLE)
 def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (bag semantics — overlapping rows kept twice)."""
-    o = load(spark, sf_dir, "orders")
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_orderkey").alias("okey"), F.lit("urgent").alias("src")
-    )
-    big = o.filter(F.col("o_totalprice") > 280000).select(
-        F.col("o_orderkey").alias("okey"), F.lit("big").alias("src")
-    )
-    return urgent.unionAll(big)
+    return catalog.sql(spark, sf_dir, _UNION_ALL_ORACLE)
 
 
 _UNION_DISTINCT_ORACLE = """
@@ -47,14 +45,7 @@ SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 280000
 @query("setop_union_distinct", oracle=_UNION_DISTINCT_ORACLE)
 def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT (reference: union + group-by dedup)."""
-    o = load(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.filter(F.col("o_totalprice") > 280000).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.union(b).distinct()
+    return catalog.sql(spark, sf_dir, _UNION_DISTINCT_ORACLE)
 
 
 _INTERSECT_ORACLE = """
@@ -67,11 +58,7 @@ SELECT s_nationkey AS nkey FROM supplier
 @query("setop_intersect", oracle=_INTERSECT_ORACLE)
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT DISTINCT (HiveIntersectRewriteRule ≙ native)."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000).select(
-        F.col("c_nationkey").alias("nkey")
-    )
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nkey"))
-    return c.intersect(s)
+    return catalog.sql(spark, sf_dir, _INTERSECT_ORACLE)
 
 
 _EXCEPT_ORACLE = """
@@ -90,13 +77,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction is structurally empty and verifies nothing. The filter
     leaves a non-empty difference at every scale factor.
     """
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nkey"))
-    s = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > 9000)
-        .select(F.col("s_nationkey").alias("nkey"))
-    )
-    return c.subtract(s)
+    return catalog.sql(spark, sf_dir, _EXCEPT_ORACLE)
 
 
 _INTERSECT_ALL_ORACLE = """
@@ -109,10 +90,7 @@ SELECT l_suppkey AS skey FROM lineitem WHERE l_discount > 0.08
 @query("setop_intersect_all", oracle=_INTERSECT_ALL_ORACLE)
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL (bag intersect, multiplicity = min of both)."""
-    li = load(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_quantity") > 45).select(F.col("l_suppkey").alias("skey"))
-    b = li.filter(F.col("l_discount") > 0.08).select(F.col("l_suppkey").alias("skey"))
-    return a.intersectAll(b)
+    return catalog.sql(spark, sf_dir, _INTERSECT_ALL_ORACLE)
 
 
 _EXCEPT_ALL_ORACLE = """
@@ -125,10 +103,7 @@ SELECT l_suppkey AS skey FROM lineitem WHERE l_discount > 0.08
 @query("setop_except_all", oracle=_EXCEPT_ALL_ORACLE)
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (bag difference, multiplicity = max(0, a-b))."""
-    li = load(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_quantity") > 45).select(F.col("l_suppkey").alias("skey"))
-    b = li.filter(F.col("l_discount") > 0.08).select(F.col("l_suppkey").alias("skey"))
-    return a.exceptAll(b)
+    return catalog.sql(spark, sf_dir, _EXCEPT_ALL_ORACLE)
 
 
 _EXCEPT_ALL_DENSE_ORACLE = """
@@ -140,23 +115,15 @@ SELECT l_partkey AS pkey FROM lineitem WHERE l_discount > 0.05
 
 @query("setop_except_all_dense", oracle=_EXCEPT_ALL_DENSE_ORACLE)
 def setop_except_all_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL with STRUCTURALLY dense multiplicities (round-13
-    review): setop_except_all — a round-1 bench SENTINEL that must
-    stay byte-identical — happens to produce 0 rows at sf0.001 and a
-    handful at sf0.01, so the max(0, a-b) bag arithmetic was
+    """EXCEPT ALL with STRUCTURALLY dense multiplicities:
+    setop_except_all (a benchmark entry, kept as it is) produces 0
+    rows at sf0.001 and a handful at sf0.01, so the max(0, a-b) bag arithmetic was
     essentially unverified at the gate scales. This sibling keys on
     l_partkey, where the per-key densities of the two predicates
     genuinely interleave: at sf0.001 the data has 172 keys with a > b
     AND 20 keys clamped at a < b (912 result rows), so both branches
     of the multiplicity formula are value-checked at every scale."""
-    li = load(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_quantity") > 20).select(
-        F.col("l_partkey").alias("pkey")
-    )
-    b = li.filter(F.col("l_discount") > 0.05).select(
-        F.col("l_partkey").alias("pkey")
-    )
-    return a.exceptAll(b)
+    return catalog.sql(spark, sf_dir, _EXCEPT_ALL_DENSE_ORACLE)
 
 
 _TOPN_ORACLE = """
@@ -172,12 +139,7 @@ def limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY + LIMIT → TakeOrderedAndProject (reference TopNHash
     pushdown into ReduceSink): no global sort is materialized, each
     partition keeps a bounded heap."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(25)
-    )
+    return catalog.sql(spark, sf_dir, _TOPN_ORACLE)
 
 
 _SORTED_ORACLE = """
@@ -191,11 +153,7 @@ ORDER BY n_regionkey, n_name
 def order_by_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global ORDER BY (range-partitioned sort, not 1-reducer like the
     reference's ORDER BY — Spark samples ranges and sorts in parallel)."""
-    return (
-        load(spark, sf_dir, "nation")
-        .select("n_name", "n_regionkey", "n_nationkey")
-        .orderBy("n_regionkey", "n_name")
-    )
+    return catalog.sql(spark, sf_dir, _SORTED_ORACLE)
 
 
 _CLUSTER_ORACLE = """
@@ -234,10 +192,7 @@ def tablesample_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     (engine-internal hash sampling is not cross-engine comparable —
     SURVEY.md §7 hard parts; Bernoulli df.sample exists but is seeded
     per-engine)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_orderkey") % 16 == 3).select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
+    return catalog.sql(spark, sf_dir, _SAMPLE_ORACLE)
 
 
 _SAMPLE_PCT_ORACLE = """
@@ -290,9 +245,4 @@ def tablesample_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     TopN form — which Catalyst executes as TakeOrderedAndProject (the
     reference's TopNHash pushdown, SURVEY.md §2.6), never a global
     sort."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-        .limit(50)
-    )
+    return catalog.sql(spark, sf_dir, _SAMPLE_ROWS_ORACLE)

@@ -4,11 +4,12 @@ Reference parity: Hive 2.3 plans these via Calcite's
 HiveSubQueryRemoveRule + HiveRelDecorrelator (51,660 B — SURVEY.md §4.1b)
 into semi/anti joins and decorrelated aggregates. Catalyst does the
 identical rewrite with RewritePredicateSubquery /
-RewriteCorrelatedScalarSubquery, so these queries are plain `spark.sql`
-over the registered views — the point is exercising the WHOLE rewrite
-surface the reference supports, TPC-H Q4/Q16/Q17/Q22 shapes adapted to
-the driver schema (no commitdate/receiptdate/mfgr columns; orders span
-1995..2001).
+RewriteCorrelatedScalarSubquery, so each entry is one SQL text:
+``catalog.sql`` runs it in Spark over views of the tables it names,
+and DuckDB runs the same text as the oracle. The point is exercising
+the WHOLE rewrite surface the reference supports, TPC-H
+Q4/Q16/Q17/Q22 shapes adapted to the driver schema (no
+commitdate/receiptdate/mfgr columns; orders span 1995..2001).
 
 Scale notes: every subquery here decorrelates to a shuffle join on the
 correlation key (Catalyst plans LEFT SEMI / LEFT ANTI / aggregate+join),
@@ -20,13 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import register_views
+from hive_service_spark import catalog
 from hive_service_spark.registry import query
-
-
-def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(text)
 
 
 # --- EXISTS (TPC-H Q4 shape) ----------------------------------------------
@@ -49,7 +45,7 @@ ORDER BY o_orderpriority
 def subq_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS -> LEFT SEMI join on o_orderkey (Catalyst
     RewritePredicateSubquery; reference: HiveSubQueryRemoveRule)."""
-    return _sql(spark, sf_dir, _EXISTS_SQL)
+    return catalog.sql(spark, sf_dir, _EXISTS_SQL)
 
 
 # --- NOT EXISTS -------------------------------------------------------------
@@ -71,7 +67,7 @@ def subq_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated NOT EXISTS -> LEFT ANTI join (the reference has no
     ANTI join operator constant — it reaches the same plan through
     subquery rewrite; SURVEY.md §2.5)."""
-    return _sql(spark, sf_dir, _NOT_EXISTS_SQL)
+    return catalog.sql(spark, sf_dir, _NOT_EXISTS_SQL)
 
 
 # --- IN ---------------------------------------------------------------------
@@ -91,7 +87,7 @@ ORDER BY p_brand
 def subq_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated IN subquery -> LEFT SEMI join after dedup of the
     subquery side."""
-    return _sql(spark, sf_dir, _IN_SQL)
+    return catalog.sql(spark, sf_dir, _IN_SQL)
 
 
 # --- NOT IN -----------------------------------------------------------------
@@ -116,7 +112,7 @@ def subq_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN -> null-aware LEFT ANTI join (both engines implement the
     three-valued-logic trap identically; keys here are non-null so the
     result is the plain anti join)."""
-    return _sql(spark, sf_dir, _NOT_IN_SQL)
+    return catalog.sql(spark, sf_dir, _NOT_IN_SQL)
 
 
 # --- correlated scalar subquery in WHERE (TPC-H Q17 shape) ------------------
@@ -139,11 +135,11 @@ def subq_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     RewriteCorrelatedScalarSubquery; reference: HiveRelDecorrelator).
     At 100 TB this is one shuffle on l_partkey for the aggregate plus
     one join — never a per-row subquery. The yearly average sums in
-    DECIMAL first (round-13 review): a plain double SUM's partial-sum
+    DECIMAL first: a plain double SUM's partial-sum
     order differs between engines by a few ulps, and dividing that
     noisy value by 7.0 could straddle a half-cent rounding boundary;
     the exact decimal sum makes the quotient deterministic."""
-    return _sql(spark, sf_dir, _SCALAR_CORR_SQL)
+    return catalog.sql(spark, sf_dir, _SCALAR_CORR_SQL)
 
 
 # --- correlated scalar subquery in SELECT -----------------------------------
@@ -170,7 +166,7 @@ def subq_scalar_in_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, so Spark and the oracle agree bit-for-bit where
     double summation (parallel, order-dependent) rounds half-cent ties
     differently per engine."""
-    return _sql(spark, sf_dir, _SCALAR_SELECT_SQL)
+    return catalog.sql(spark, sf_dir, _SCALAR_SELECT_SQL)
 
 
 # --- TPC-H Q22 shape: scalar filter + anti join together --------------------
@@ -199,4 +195,4 @@ def subq_q22_global_filter_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer has at least one order, so the classic "no orders at all"
     predicate is structurally empty here — "no urgent orders" keeps the
     decorrelated anti-join shape and observes rows at every sf."""
-    return _sql(spark, sf_dir, _Q22_SQL)
+    return catalog.sql(spark, sf_dir, _Q22_SQL)

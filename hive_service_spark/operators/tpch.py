@@ -4,12 +4,14 @@ These exercise the full scan→filter→join→aggregate→sort pipeline the
 reference compiles through its Operator DAG (SURVEY.md §2.1:
 TableScanOperator → FilterOperator → MapJoin/JoinOperator →
 GroupByOperator → ReduceSinkOperator → FileSink/ListSink). Here each
-stage is declared via the DataFrame API and Catalyst plans the physical
+query is one SQL text: ``catalog.sql`` runs it in Spark and DuckDB
+runs the same text as the oracle. Catalyst plans the physical
 operators (FileSourceScan with pushed filters → BroadcastHashJoin /
 SortMergeJoin → partial+final HashAggregate → TakeOrderedAndProject).
 
 Scale notes (100 TB): filters are pushed to the parquet scan; the
-region/nation dims are broadcast (fixed cardinality); customer/orders/
+region/nation dims are broadcast by a ``/*+ BROADCAST */`` hint
+(fixed cardinality; DuckDB reads the hint as a comment); customer/orders/
 lineitem joins shuffle on their keys with AQE handling skew and
 coalescing; aggregations are map-side partial first. No driver-side
 collect anywhere.
@@ -17,10 +19,9 @@ collect anywhere.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import load
+from hive_service_spark import catalog
 from hive_service_spark.registry import query
 
 # --- Q1: pricing summary (the flagship; smoke query for entry()) -----
@@ -52,24 +53,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §2.1) ≙ Catalyst partial/final HashAggregate; the
     shipdate predicate reaches the parquet scan as a pushed filter.
     """
-    li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") < F.lit("1998-09-03").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    return catalog.sql(spark, sf_dir, _Q1_ORACLE)
 
 
 # --- Q3: shipping priority (join + agg + top-N) ----------------------
@@ -100,32 +84,13 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §2.1/§2.6) ≙ SortMergeJoin/ShuffledHashJoin +
     TakeOrderedAndProject. Filters prune each scan before the join.
     """
-    cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
-    )
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
+    return catalog.sql(spark, sf_dir, _Q3_ORACLE)
 
 
 # --- Q5: local supplier volume (6-way join incl. broadcast dims) -----
 
 _Q5_ORACLE = """
-SELECT
+SELECT /*+ BROADCAST(nation, region) */
   n_name,
   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM customer
@@ -147,37 +112,11 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join chain with broadcast small dims.
 
     Reference parity: MapJoinOperator for the small sides (SURVEY.md
-    §2.1) ≙ explicit `F.broadcast` on the FIXED-cardinality dims only
-    (nation=25, region=5). supplier is sf-scaled, so its hint is left
+    §2.1) ≙ a `BROADCAST` hint on the FIXED-cardinality dims only
+    (nation=25, region=5). supplier is sf-scaled, so its join is left
     to AQE + autoBroadcastJoinThreshold — at sf0.1 the threshold still
     picks broadcast (plan-pinned), while at 100x a forced hint would
-    be a multi-GB executor-OOM broadcast (round-6 advice #4). The big
+    be a multi-GB executor-OOM broadcast. The big
     customer⋈orders⋈lineitem chain shuffles on its keys.
     """
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = load(spark, sf_dir, "lineitem")
-    supp = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
-        .join(
-            supp,
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "n_name")
-    )
+    return catalog.sql(spark, sf_dir, _Q5_ORACLE)

@@ -8,11 +8,18 @@ clientpositive/perf query set). Adapted where the driver schema lacks a
 TPC-H column (no partsupp table, no l_shipmode/l_commitdate — noted per
 query).
 
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query. A forced broadcast
+is a ``/*+ BROADCAST(t) */`` hint in the text, which DuckDB reads as a
+comment. q7 and q18 keep DataFrame code: Spark does not run their text
+as it stands, or plans it differently.
+
 Scale notes (100 TB): same discipline as tpch.py — filters reach the
-parquet scans, fixed-cardinality dims (nation/region) and filtered
-small sides are broadcast explicitly, the lineitem⋈orders⋈customer
-chain shuffles on join keys with AQE skew handling, aggregates are
-partial-then-final. Nothing collects to the driver.
+parquet scans, fixed-cardinality dims (nation/region) are broadcast by
+hint, the lineitem⋈orders⋈customer chain shuffles on join keys with
+AQE skew handling, aggregates are partial-then-final. Nothing collects
+to the driver.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -45,17 +53,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: the purest pushdown test — every predicate lands in
     the parquet scan (PushedFilters shows shipdate/discount/quantity),
     one map-side partial SUM, no shuffle beyond the final reduce."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1997-01-01"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-            "revenue"
-        )
-    )
+    return catalog.sql(spark, sf_dir, _Q6_ORACLE)
 
 
 # --- Q7: volume shipping between two nations -------------------------------
@@ -137,7 +135,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # no broadcast hint on the customer arm: 2/25 of customer is still
     # O(table) at 100 TB — AQE broadcasts it at test scale and shuffles
-    # it when it outgrows the threshold (the round-5 sizes-broadcast rule)
+    # it when it outgrows the threshold
     orders_n = load(spark, sf_dir, "orders").join(
         cust_n, F.col("o_custkey") == F.col("c_custkey")
     )
@@ -173,7 +171,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q9_ORACLE = """
 SELECT nation, o_year, CAST(ROUND(SUM(amount), 2) AS DOUBLE) AS sum_profit
 FROM (
-  SELECT n_name AS nation,
+  SELECT /*+ BROADCAST(nation) */
+         n_name AS nation,
          EXTRACT(year FROM o_orderdate)::BIGINT AS o_year,
          CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
            - CAST(p_retailprice * 0.6 * l_quantity AS DECIMAL(18,4)) AS amount
@@ -203,34 +202,14 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are exact at four places, so the decimal sum does not depend
     on summation order, and ROUND(..., 2) cannot land on a different
     side of a half-cent than the oracle's. A double sum did, by 0.01."""
-    part = load(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    li = load(spark, sf_dir, "lineitem")
-    supp = load(spark, sf_dir, "supplier")
-    orders = load(spark, sf_dir, "orders")
-    nation = load(spark, sf_dir, "nation")
-    amount = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    ) - (F.col("p_retailprice") * 0.6 * F.col("l_quantity")).cast("decimal(18,4)")
-    return (
-        part.join(li, F.col("p_partkey") == F.col("l_partkey"))
-        .join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("bigint").alias("o_year"),
-            amount.alias("amount"),
-        )
-        .groupBy("nation", "o_year")
-        .agg(F.round(F.sum("amount"), 2).cast("double").alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
+    return catalog.sql(spark, sf_dir, _Q9_ORACLE)
 
 
 # --- Q10: returned item reporting ------------------------------------------
 
 _Q10_ORACLE = """
-SELECT c_custkey, c_name,
+SELECT /*+ BROADCAST(nation) */
+       c_custkey, c_name,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        ROUND(c_acctbal, 2) AS c_acctbal, n_name
 FROM customer
@@ -250,33 +229,7 @@ LIMIT 20
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: returned-lineitem revenue per customer, top 20 —
     join + agg + TakeOrderedAndProject (reference TopNHash pushdown)."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-10-01"))
-        & (F.col("o_orderdate") < _ts("1997-01-01"))
-    )
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = load(spark, sf_dir, "nation")
-    return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select(
-            "c_custkey",
-            "c_name",
-            "revenue",
-            F.round("c_acctbal", 2).alias("c_acctbal"),
-            "n_name",
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
+    return catalog.sql(spark, sf_dir, _Q10_ORACLE)
 
 
 # --- Q12: priority shipping (adapted: no l_shipmode → returnflag classes) --
@@ -302,22 +255,7 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 adapted (no l_shipmode/l_commitdate in driver schema:
     groups by l_linestatus instead). The conditional-SUM pivot is the
     canonical CASE-inside-aggregate pattern."""
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1997-01-01"))
-        & (F.col("l_returnflag") != "A")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
+    return catalog.sql(spark, sf_dir, _Q12_ORACLE)
 
 
 # --- Q14: promotion effect --------------------------------------------------
@@ -338,19 +276,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-09-01'
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: conditional revenue ratio over a part join — single
     global aggregate with CASE numerator."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-09-01"))
-        & (F.col("l_shipdate") < _ts("1996-10-01"))
-    )
-    part = load(spark, sf_dir, "part")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), disc).otherwise(0.0)
-    return (
-        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(100.0 * F.sum(promo) / F.sum(disc), 4).alias("promo_revenue")
-        )
-    )
+    return catalog.sql(spark, sf_dir, _Q14_ORACLE)
 
 
 # --- Q18: large volume customers (agg-filtered IN subquery) -----------------
@@ -432,31 +358,4 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates the residual on CommonJoinOperator matched pairs
     (SURVEY.md §2.5); Catalyst pushes the derivable brand/size/quantity
     bounds to both scans."""
-    li = load(spark, sf_dir, "lineitem")
-    part = load(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .filter(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
+    return catalog.sql(spark, sf_dir, _Q19_ORACLE)

@@ -21,6 +21,11 @@ conditional share (Q8), HAVING against a global scalar (Q11), left
 outer + double aggregation (Q13), view + scalar max (Q15), NOT IN +
 count-distinct (Q16), nested semi-joins (Q20).
 
+Q13 is one SQL text that ``catalog.sql`` runs in Spark and DuckDB runs
+as the oracle. The others keep DataFrame code: Spark does not run
+their text as it stands, plans it differently, or (Q21) runs it
+slower.
+
 Scale notes (100 TB): all correlated subqueries decorrelate to
 joins/semi-joins (Catalyst RewriteCorrelatedScalarSubquery /
 RewritePredicateSubquery ≙ HiveSubQueryRemoveRule + HiveRelDecorrelator
@@ -33,6 +38,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import persisted, query
 
@@ -78,7 +84,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation/region) broadcast by hint; sf-scaled frames (part,
     supplier) are left to AQE + the broadcast threshold, which still
     picks broadcast at test sfs but degrades safely to shuffle join at
-    100 TB instead of OOMing executors (round-6 advice #4)."""
+    100 TB instead of OOMing executors."""
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").where(
         (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
@@ -194,9 +200,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins that run once. The fact stream (lineitem) then
     passes through only FOUR joins — part, supplier-dim, orders
     (the one big shuffle pair), customer-dim — instead of seven;
-    fewer per-row probes AND fewer broadcast builds, which round-2
-    benchmarking showed dominate this query's wall-clock on slow
-    hosts. The same nation table joins twice (customer side, supplier
+    fewer per-row probes AND fewer broadcast builds, which dominate
+    this query's wall-clock on slow hosts. The same nation table joins twice (customer side, supplier
     side) — alias discipline mirrors the reference's QBJoinTree."""
     part = load(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
     li = load(spark, sf_dir, "lineitem")
@@ -227,8 +232,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a semi-filter that cannot duplicate) cuts the orders side to
     # region-fraction x date-fraction of the table, and only
     # (o_orderkey, o_year) survive the projection — the fact⋈orders
-    # shuffle then moves ~6% of the rows the round-5 plan moved
-    # (round-5 advice #8)
+    # shuffle then moves ~6% of the rows a join-after plan moves
     orders_am = orders.join(
         cust_am, F.col("o_custkey") == F.col("c_custkey")
     ).select("o_orderkey", F.year("o_orderdate").alias("o_year"))
@@ -327,21 +331,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides in the JOIN condition, not WHERE (moving it to WHERE would
     silently turn the join inner — the classic outer-join trap the
     reference's ppd pass must also respect)."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    cond = (F.col("c_custkey") == F.col("o_custkey")) & (
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        cust.join(orders, cond, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
+    return catalog.sql(spark, sf_dir, _Q13_ORACLE)
 
 
 # --- Q15: top supplier (view + scalar max) ----------------------------------

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_service_spark.catalog import register_views
+from hive_service_spark import catalog
 from hive_service_spark.registry import query
 from hive_service_spark.scratch import stage_text
 
@@ -48,8 +48,9 @@ def transform_script_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate the script output. The oracle recomputes the script's
     transformation in SQL."""
     script_path = stage_text(_SCRIPT, "transform_upper.py")
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT event_type_u, COUNT(*) AS n, CAST(SUM(uid2) AS BIGINT) AS uid2_sum
         FROM (
@@ -106,8 +107,9 @@ def transform_script_delimited(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip exact. Same per-task process fan-out as the default
     protocol variant (transform_script_pipe)."""
     script_path = stage_text(_DELIM_SCRIPT, "transform_delim.py")
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT event_type_u,
                COUNT(*) AS n,

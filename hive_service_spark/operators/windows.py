@@ -12,6 +12,12 @@ PTFRowContainer). Specs sharing (partitionBy, orderBy) reuse one
 Window exec — queries below deliberately share specs. Deterministic
 output requires a total order: every orderBy includes a unique
 tie-breaker key.
+
+One SQL text per entry where it can be: ``catalog.sql`` runs the
+entry's text in Spark and DuckDB runs the same text as its oracle, so
+the oracle check compares two engines on one query.
+``window_skyline_pareto`` keeps its DataFrame code: it is a sort-based
+rewrite of the quadratic NOT EXISTS text its oracle runs.
 """
 
 from __future__ import annotations
@@ -19,6 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from hive_service_spark import catalog
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
@@ -44,24 +51,7 @@ WHERE rn <= 10
 @query("window_ranking", oracle=_RANKING_ORACLE)
 def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All six ranking functions over one shared window spec."""
-    c = load(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.desc("c_acctbal"), F.asc("c_custkey")
-    )
-    return (
-        c.select(
-            "c_mktsegment",
-            "c_custkey",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-            F.rank().over(w).alias("rnk"),
-            F.dense_rank().over(w).alias("drnk"),
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 6).alias("cume"),
-        )
-        .filter(F.col("rn") <= 10)
-    )
+    return catalog.sql(spark, sf_dir, _RANKING_ORACLE)
 
 
 _LEADLAG_ORACLE = """
@@ -82,19 +72,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 @query("window_lead_lag", oracle=_LEADLAG_ORACLE)
 def window_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead/lag with offsets + defaults (GenericUDAFLeadLag)."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.lag("o_totalprice", 2, -1).over(w).alias("prev2_price_dflt"),
-        (F.col("o_totalprice") - F.lag("o_totalprice").over(w)).alias(
-            "delta_vs_prev"
-        ),
-    )
+    return catalog.sql(spark, sf_dir, _LEADLAG_ORACLE)
 
 
 _ROWS_FRAME_ORACLE = """
@@ -119,22 +97,7 @@ WHERE o_custkey < 50
 def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROWS frames: running total, moving average, sliding count
     (WindowingSpec$WindowType.ROWS)."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    base = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(
-            F.sum("o_totalprice").over(
-                base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-            2,
-        ).alias("running_total"),
-        F.round(
-            F.avg("o_totalprice").over(base.rowsBetween(-2, Window.currentRow)), 4
-        ).alias("moving_avg3"),
-        F.count(F.lit(1)).over(base.rowsBetween(-1, 1)).alias("neighborhood"),
-    )
+    return catalog.sql(spark, sf_dir, _ROWS_FRAME_ORACLE)
 
 
 _RANGE_FRAME_ORACLE = """
@@ -158,21 +121,7 @@ WHERE l_orderkey < 300
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frames on a numeric ordering column (typed
     ValueBoundaryScanner analog: value-based, peers included)."""
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 300)
-    by_qty = Window.partitionBy("l_returnflag").orderBy("l_quantity")
-    return li.select(
-        "l_returnflag",
-        "l_orderkey",
-        "l_linenumber",
-        "l_quantity",
-        F.count(F.lit(1)).over(by_qty.rangeBetween(-5, 5)).alias("n_similar_qty"),
-        F.round(
-            F.sum("l_extendedprice").over(
-                by_qty.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-            2,
-        ).alias("cum_price_by_qty"),
-    )
+    return catalog.sql(spark, sf_dir, _RANGE_FRAME_ORACLE)
 
 
 _TIME_RANGE_ORACLE = """
@@ -197,7 +146,7 @@ WHERE user_id < 20
 def window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based RANGE frame via epoch MICROseconds (reference
     TimestampValueBoundaryScanner; portable across engines as numeric
-    range on unix time). Round-13 review: unix_timestamp() truncates
+    range on unix time). unix_timestamp() truncates
     to whole seconds while DuckDB's epoch() is fractional — an event
     pair landing within 1 s of the 3600 s boundary with the right
     fractions would sit inside one engine's frame and outside the
@@ -235,16 +184,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 @query("window_first_last_nth", oracle=_FIRST_LAST_ORACLE)
 def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value / last_value (full frame) / nth_value."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.first("o_orderkey").over(w).alias("first_order"),
-        F.last("o_orderkey").over(full).alias("last_order"),
-        F.nth_value("o_orderkey", 2).over(w).alias("second_order"),
-    )
+    return catalog.sql(spark, sf_dir, _FIRST_LAST_ORACLE)
 
 
 _PARTITION_AGG_ORACLE = """
@@ -305,17 +245,7 @@ def window_range_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's pandas path renders DECIMAL as float64 while Spark
     collects Decimal objects, so a decimal output column can never
     repr-hash-match even when values are equal."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 20)
-    price = F.col("o_totalprice").cast("decimal(18,2)")
-    w = Window.orderBy(price).rangeBetween(-1000, 0)
-    return o.select(
-        "o_orderkey",
-        price.cast("double").alias("price_dec"),
-        F.count(F.lit(1)).over(w).alias("n_within_1000"),
-        # sums stay scale-2 exact in decimal; the plain double cast of
-        # an exact 2-decimal value renders identically in both engines
-        F.sum(price).over(w).cast("double").alias("sum_within_1000"),
-    )
+    return catalog.sql(spark, sf_dir, _RANGE_DECIMAL_ORACLE)
 
 
 _RANGE_STRING_ORACLE = """
@@ -349,25 +279,7 @@ def window_range_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality anyway. Decimal inside SUM keeps the money cumsum exact
     and order-independent (repo ROUND convention); one shuffle on
     o_orderstatus, sort within partition."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    w_cum = (
-        Window.partitionBy("o_orderstatus")
-        .orderBy("o_orderpriority")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_peers = (
-        Window.partitionBy("o_orderstatus")
-        .orderBy("o_orderpriority")
-        .rangeBetween(Window.currentRow, Window.currentRow)
-    )
-    price = F.col("o_totalprice").cast("decimal(18,2)")
-    return o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_orderpriority",
-        F.sum(price).over(w_cum).cast("double").alias("cum_price_with_peers"),
-        F.count(F.lit(1)).over(w_peers).alias("n_peers"),
-    )
+    return catalog.sql(spark, sf_dir, _RANGE_STRING_ORACLE)
 
 
 # ---------------------------------------------------------------------------

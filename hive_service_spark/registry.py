@@ -207,9 +207,5 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (idempotent) and return the registry."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # module not built yet — fine during incremental development
-            pass
+        importlib.import_module(mod)
     return dict(_REGISTRY)

@@ -27,7 +27,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
 from hive_service_spark import catalog
 from hive_service_spark.registry import query, release_stream_bus
@@ -42,20 +41,13 @@ _NS = pid_dir("proc")
 _CKPT = f"{_NS}/checkpoints"
 
 
-def _raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Pre-conversion schema (ts read as long — see catalog.load)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return catalog.schema(spark, f"{sf_dir}/events.parquet")
-
-
 def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table. The file source wants
     a DIRECTORY it can monitor for arriving files (that's the whole
     point of the source), so the single driver parquet file is staged
     into a scratch dir once per scale factor — in production this is
-    the landing directory files keep arriving into. The TIMESTAMP(NANOS)
-    column gets the same nanos->micros conversion as the batch path
-    (catalog.load)."""
+    the landing directory files keep arriving into. ``ts`` gets the
+    same conversion as the batch path (catalog.load)."""
     src = Path(sf_dir) / "events.parquet"
     stage = Path(f"{_SCRATCH}/stream_src") / Path(sf_dir).name
     # staleness check matters: the stream reads the STAGED file with
@@ -65,17 +57,8 @@ def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through a per-pid temp file + atomic rename — a concurrent reader
     # never sees a torn file.
     stage_source(src, stage)
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    raw = _raw_schema(spark, sf_dir)
-    df = spark.readStream.schema(raw).parquet(str(stage))
-    if isinstance(raw["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw["ts"].dataType, TimestampNTZType):
-        # match the batch path (catalog.load): NTZ -> TIMESTAMP under
-        # the pinned-UTC session so watermarks/epoch math keep working
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    raw = catalog.events_schema(spark, str(src))
+    return catalog.events_ts(spark.readStream.schema(raw).parquet(str(stage)))
 
 
 def await_stream(q: StreamingQuery) -> None:

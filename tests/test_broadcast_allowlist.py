@@ -11,7 +11,11 @@ test_plans.py verify the high-risk families against the live plan.
 This lint makes the purge PERMANENT and repo-wide: every forced
 broadcast call site (found by AST walk — no false hits from docstrings
 or ``hint("shuffle_hash")``) must appear below, keyed by (module,
-enclosing function), with its scale-boundedness justification. A new
+enclosing function), with its scale-boundedness justification. So must
+every table named in a ``/*+ BROADCAST|BROADCASTJOIN|MAPJOIN(...) */``
+hint inside a string constant (a SQL text), keyed by (module,
+enclosing function) or, for a module-level text, (module, the name
+the text is assigned to). A new
 site — or a new broadcast inside an allowed function — fails this test
 until it is justified here, which is exactly the review conversation a
 forced hint deserves.
@@ -41,6 +45,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 ROOT = os.path.join(os.path.dirname(__file__), "..", "hive_service_spark")
 
@@ -143,7 +148,7 @@ ALLOWLIST = {
         (1, "group-bounded: one bitmap row per flag value"),
     ("operators/graph_analytics.py", "_per_node_side"):
         (1, "size-gated: measured node count vs cap (pinned)"),
-    ("operators/joins.py", "join_inner_broadcast"):
+    ("operators/joins.py", "_INNER_ORACLE"):
         (1, "fixed-dim: nation — the MapJoin surface itself"),
     ("operators/partition_pruning.py", "layout_zorder_skipping"):
         (1, "file-stats: per-file min/max boxes"),
@@ -156,13 +161,13 @@ ALLOWLIST = {
             "plan-pinned in test_plans.py)"),
     ("operators/sequence_analytics.py", "ts_mad_robust_anomalies"):
         (3, "group-bounded: median/MAD per event_type"),
-    ("operators/tpch.py", "q5_local_supplier_volume"):
+    ("operators/tpch.py", "_Q5_ORACLE"):
         (2, "fixed-dim: nation + region"),
-    ("operators/tpch_extra.py", "q10_returned_items"):
+    ("operators/tpch_extra.py", "_Q10_ORACLE"):
         (1, "fixed-dim: nation"),
     ("operators/tpch_extra.py", "q7_volume_shipping"):
         (2, "fixed-dim: nation x2"),
-    ("operators/tpch_extra.py", "q9_product_profit"):
+    ("operators/tpch_extra.py", "_Q9_ORACLE"):
         (1, "fixed-dim: nation"),
     ("operators/tpch_more.py", "q11_important_stock"):
         (2, "fixed-dim: nation + scalar-1row threshold"),
@@ -194,6 +199,12 @@ ALLOWLIST = {
 }
 
 
+# a join hint in SQL text; group 2 lists the hinted tables
+_SQL_HINT = re.compile(
+    r"/\*\+[^*]*?\b(BROADCAST|BROADCASTJOIN|MAPJOIN)\s*\(([^)]*)\)", re.IGNORECASE
+)
+
+
 def _inventory():
     inv: dict[tuple[str, str], int] = {}
     for dirpath, _, files in os.walk(ROOT):
@@ -215,6 +226,38 @@ def _inventory():
                     self.stack.pop()
 
                 visit_AsyncFunctionDef = visit_FunctionDef
+
+                def visit_Assign(self, node):
+                    named = not self.stack and len(node.targets) == 1 and (
+                        isinstance(node.targets[0], ast.Name)
+                    )
+                    if named:
+                        self.stack.append(node.targets[0].id)
+                    self.generic_visit(node)
+                    if named:
+                        self.stack.pop()
+
+                def visit_Expr(self, node):
+                    # a bare string statement is a docstring: no SQL
+                    if not (
+                        isinstance(node.value, ast.Constant)
+                        and isinstance(node.value.value, str)
+                    ):
+                        self.generic_visit(node)
+
+                def visit_Constant(self, node):
+                    if not isinstance(node.value, str):
+                        return
+                    n = sum(
+                        len([t for t in m.group(2).split(",") if t.strip()])
+                        for m in _SQL_HINT.finditer(node.value)
+                    )
+                    if n:
+                        key = (
+                            rel,
+                            self.stack[-1] if self.stack else "<module>",
+                        )
+                        inv[key] = inv.get(key, 0) + n
 
                 def visit_Call(self, node):
                     fn = node.func

@@ -121,7 +121,12 @@ def test_rewritten_spark_directory_is_reinferred(spark, tmp_path):
     assert sorted(map(tuple, df.collect())) == [(0, "x"), (1, "x"), (2, "x")]
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def test_events_ts_converts_to_timestamp_for_both_encodings(spark, tmp_path):
+    """Both encodings read as TIMESTAMP; only a NANOS file sets
+    nanosAsLong on the session."""
     want = [dt.datetime(2024, 1, 1, 0, 0, 1, 5), dt.datetime(2024, 1, 2, 3, 4, 5)]
     for unit in ("ns", "us"):
         sf_dir = tmp_path / unit
@@ -130,10 +135,55 @@ def test_events_ts_converts_to_timestamp_for_both_encodings(spark, tmp_path):
             pa.table({"event_id": [1, 2], "ts": pa.array(want, pa.timestamp(unit))}),
             sf_dir / "events.parquet",
         )
+        session = spark.newSession()
         for _ in range(2):  # cold, then from the cached schema
-            df = catalog.load(spark, str(sf_dir), "events")
+            df = catalog.load(session, str(sf_dir), "events")
             assert isinstance(df.schema["ts"].dataType, TimestampType), unit
             assert [r.ts for r in df.orderBy("event_id").collect()] == want, unit
+        nanos = session.conf.get(_NANOS_AS_LONG, "false") == "true"
+        assert nanos == (unit == "ns"), unit
+
+
+def test_binding_testdata_events_leaves_nanos_as_long_unset(spark):
+    """The shipped testdata stores events.ts as TIMESTAMP(MICROS)."""
+    from tests.conftest import SF_DIR
+
+    session = spark.newSession()
+    catalog.bind(session, SF_DIR, "events")
+    assert session.conf.get(_NANOS_AS_LONG, "false") == "false"
+    assert isinstance(session.table("events").schema["ts"].dataType, TimestampType)
+
+
+def test_sql_entry_warm_build_starts_no_job_and_sees_a_rewrite(spark, tmp_path):
+    """An entry that runs its SQL text binds its tables through
+    catalog.load: a warm build starts no job, and a table file
+    rewritten with another schema is read with the new one."""
+    from hive_service_spark.registry import load_all
+
+    fn = load_all()["scan_project_filter"].fn
+    path = tmp_path / "lineitem.parquet"
+
+    def write(qty_type):
+        pq.write_table(
+            pa.table({
+                "l_orderkey": [1, 2],
+                "l_linenumber": [1, 1],
+                "l_quantity": pa.array([15, 30], qty_type),
+                "l_extendedprice": [100.0, 200.0],
+                "l_discount": [0.5, 0.5],
+            }),
+            path,
+        )
+
+    write(pa.float64())
+    fn(spark, str(tmp_path))
+    df, n_jobs = _jobs(spark, lambda: fn(spark, str(tmp_path)))
+    assert n_jobs == 0
+    assert df.schema["l_quantity"].dataType.simpleString() == "double"
+    write(pa.int64())
+    df = fn(spark, str(tmp_path))
+    assert df.schema["l_quantity"].dataType.simpleString() == "bigint"
+    assert [tuple(r) for r in df.collect()] == [(1, 1, 50.0, 15)]
 
 
 def test_concurrent_loads_return_correct_frames(spark, tmp_path):

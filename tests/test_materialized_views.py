@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from hive_service_spark.catalog import register_views
+from hive_service_spark.catalog import TABLES, bind
 from hive_service_spark.operators.materialized_views import (
     Measure,
     lineitem_revenue_mv,
@@ -28,7 +28,7 @@ _COUNT_REV = {
 def test_rewrite_scans_mv_not_base(spark):
     """The rewritten plan must read the MV parquet and never touch
     base lineitem — the 100 TB scan becomes a ~50-row scan."""
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = mv.rewrite(
@@ -41,7 +41,7 @@ def test_rewrite_scans_mv_not_base(spark):
 
 
 def test_fallback_scans_base(spark):
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = mv.rewrite(
@@ -56,7 +56,7 @@ def test_fallback_scans_base(spark):
 
 
 def test_containment_rules(spark):
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     # subset of dims + derivable measures → yes
@@ -77,7 +77,7 @@ def test_stale_mv_blocks_rewrite_until_rebuild(spark):
     """Freshness: after the base changes (invalidate), the rewriter
     must refuse the MV; a rebuild restores it. Mirrors the reference's
     per-MV freshness tracking."""
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     assert mv.can_answer(("l_returnflag",), dict(_COUNT_REV))
@@ -94,7 +94,7 @@ def test_stale_mv_blocks_rewrite_until_rebuild(spark):
 def test_avg_is_rederived_not_averaged(spark):
     """AVG over the MV must equal AVG over the base (sum/count), which
     a naive AVG(avg_partial) would get wrong on skewed group sizes."""
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = mv.rewrite(
@@ -122,7 +122,7 @@ def test_sql_transparent_rewrite_scans_mv(spark):
     rules/views behavior, no Request object in sight."""
     from hive_service_spark.operators.materialized_views import rewrite_sql
 
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = rewrite_sql(
@@ -141,7 +141,7 @@ def test_sql_transparent_falls_back(spark):
     verbatim through spark.sql. Both stay correct, neither errors."""
     from hive_service_spark.operators.materialized_views import rewrite_sql
 
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = rewrite_sql(
@@ -163,7 +163,7 @@ def test_sql_rewrite_error_falls_back_not_raises(spark):
     raise. The fallback result must equal running the SQL directly."""
     from hive_service_spark.operators.materialized_views import rewrite_sql
 
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     sql = (
@@ -186,7 +186,7 @@ def test_sql_order_by_modifier_falls_back_not_misparses(spark):
     honored."""
     from hive_service_spark.operators.materialized_views import rewrite_sql
 
-    register_views(spark, SF_DIR)
+    bind(spark, SF_DIR, *TABLES)
     mv = lineitem_revenue_mv()
     mv.build(spark)
     df, used = rewrite_sql(

@@ -13,14 +13,14 @@ from __future__ import annotations
 import pytest
 from pyspark.errors import AnalysisException, ParseException
 
-from hive_service_spark.catalog import register_views
+from hive_service_spark.catalog import TABLES, bind
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _views(spark):
-    register_views(spark, SF)
+    bind(spark, SF, *TABLES)
 
 
 def test_unresolved_column(spark):

@@ -77,6 +77,20 @@ def test_caller_settings_reach_the_query_and_query_settings_stay_out(spark):
         spark.sql("DROP TEMPORARY FUNCTION IF EXISTS caller_fn")
 
 
+def test_sql_entry_binds_its_views_in_its_own_copy(spark):
+    """An entry that runs its SQL text (catalog.sql) binds the tables
+    it names in its session copy, never in the caller's session."""
+    caller = spark.newSession()
+    df = _SPECS["q3_shipping_priority"].fn(caller, SF_DIR)
+    assert df.collect()
+
+    def temp_views(session):
+        return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+    assert {"customer", "orders", "lineitem"} <= temp_views(df.sparkSession)
+    assert "lineitem" not in temp_views(caller)
+
+
 def test_caller_conf_decides_the_query_plan(spark):
     """A conf the caller sets before the call reaches the query's plan
     (tests/test_plans.py relies on this for autoBroadcastJoinThreshold)."""
