@@ -116,8 +116,8 @@ SELECT l_partkey AS pkey FROM lineitem WHERE l_discount > 0.05
 @query("setop_except_all_dense", oracle=_EXCEPT_ALL_DENSE_ORACLE)
 def setop_except_all_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL with STRUCTURALLY dense multiplicities:
-    setop_except_all (a benchmark entry, kept as it is) produces 0
-    rows at sf0.001 and a handful at sf0.01, so the max(0, a-b) bag arithmetic was
+    setop_except_all (a benchmark entry, so its predicates stay fixed)
+    produces 0 rows at sf0.001 and a handful at sf0.01, so the max(0, a-b) bag arithmetic was
     essentially unverified at the gate scales. This sibling keys on
     l_partkey, where the per-key densities of the two predicates
     genuinely interleave: at sf0.001 the data has 172 keys with a > b
