@@ -56,8 +56,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hive_service_spark import scratch  # noqa: E402
 from hive_service_spark.registry import load_all  # noqa: E402
-from hive_service_spark.session import get_session  # noqa: E402
+from hive_service_spark.session import get_session, startup_info  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -349,6 +350,23 @@ def _pick_run(first: dict, second: dict) -> tuple[dict, dict]:
     return (second, first) if key(second) < key(first) else (first, second)
 
 
+def _settings(spark) -> dict:
+    """The settings that move timings, recorded next to the numbers:
+    how the JVM started (``session.startup_info``), core count, shuffle
+    and scratch directories, and the join policy."""
+    keys = (
+        "spark.local.dir",
+        "spark.sql.join.preferSortMergeJoin",
+        "spark.sql.autoBroadcastJoinThreshold",
+    )
+    return {
+        "startup": startup_info(),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "scratch_root": scratch.SCRATCH_ROOT,
+        **{k: spark.conf.get(k, None) for k in keys},
+    }
+
+
 def main(argv: list[str]) -> None:
     specs = load_all()
     unknown = [name for name in argv if name not in specs]
@@ -416,6 +434,7 @@ def main(argv: list[str]) -> None:
                 "host_factor_warn": warn,
                 "spread_retry": retried,
                 "discarded_run": discarded,
+                "settings": _settings(spark),
                 "host_factor_note": (
                     "host_factor and the instrument gates are documented "
                     "in the bench.py module docstring"

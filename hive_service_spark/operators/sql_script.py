@@ -24,7 +24,6 @@ from __future__ import annotations
 import hashlib
 import re
 
-import pyspark.sql.functions as F  # noqa: F401  (parity with sibling modules)
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_service_spark.registry import query

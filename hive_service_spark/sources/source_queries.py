@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from hive_service_spark.catalog import load
 from hive_service_spark.registry import query
 
-from hive_service_spark.scratch import SCRATCH_ROOT as _SCRATCH
 from hive_service_spark.scratch import pid_dir
 
 # Per-process root for write-then-read-back round-trips: two concurrent

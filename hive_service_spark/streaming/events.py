@@ -19,7 +19,6 @@ parquet/Delta/Kafka via the identical writeStream call.
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 import pandas as pd

@@ -17,6 +17,11 @@ an ``__exit__`` method. A registered query runs in its own copy of the
 caller's session (``registry.run``), so it sets what it needs and
 leaves it set; a hand-written restore is dead weight, and one that
 races a concurrent peer's read is a bug.
+
+Rule 4: no module under ``hive_service_spark/`` imports a name at top
+level that it never uses. No pyflakes or ruff is installed, so the scan
+is ``ast``: an imported name counts as used when it appears as a name
+anywhere in the module.
 """
 
 from __future__ import annotations
@@ -184,3 +189,47 @@ def ok(spark, state):
         state.set("done")
 '''
     assert conf_restores(src) == [8, 12]
+
+
+def unused_imports(source: str) -> list[str]:
+    """``line:name`` of top-level imports whose name the module never
+    uses (``from __future__`` and star imports excepted)."""
+    tree = ast.parse(source)
+    imported: dict[str, int] = {}
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                imported[alias.asname or alias.name.split(".")[0]] = node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for alias in node.names:
+                if alias.name != "*":
+                    imported[alias.asname or alias.name] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return sorted(f"{line}:{name}" for name, line in imported.items() if name not in used)
+
+
+def test_package_has_no_unused_import():
+    bad = [
+        f"{path.relative_to(ROOT)}:{hit}"
+        for path in sorted((ROOT / "hive_service_spark").rglob("*.py"))
+        for hit in unused_imports(path.read_text())
+    ]
+    assert not bad, f"unused top-level import: {bad}"
+
+
+def test_unused_import_lint_detects_a_planted_import():
+    """Self-test: flags an unused plain, aliased and from-import, and
+    passes names used in calls, attributes and annotations."""
+    src = '''
+from __future__ import annotations
+
+import os
+import pyspark.sql.functions as F
+from pathlib import Path
+from typing import Any
+import json
+
+def f(x: Any) -> str:
+    return json.dumps(x)
+'''
+    assert unused_imports(src) == ["4:os", "5:F", "6:Path"]
