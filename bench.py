@@ -129,8 +129,8 @@ HEADLINE = [
     "ts_cusum_changepoint",
     "seq_attribution_credit",
     "text_ngram_novelty",
-    # round-9: the widened MatchPath chain class (alternation group +
-    # bounded quantifier), compiled to the same Python-free island walk
+    # MatchPath with an alternation group + bounded quantifier: a
+    # finite pattern, on the Python-free lead chain
     "seq_matchpath_alternation",
     # round-9: cross-document repeated-passage spans (passage-level
     # dedup audit — linear gram flagging, no pair-space expansion) and

@@ -1,36 +1,34 @@
-"""General MatchPath: arbitrary symbol-pattern matching over row
-sequences — the full analog of the reference's MatchPath PTF
-(SURVEY.md §2.4, hive-exec!ql/udf/ptf/MatchPath.class: npath/matchpath,
-the pre-MATCH_RECOGNIZE row-pattern surface).
+"""General MatchPath: symbol-pattern matching over row sequences, the
+analog of the reference's MatchPath PTF (SURVEY.md §2.4,
+hive-exec!ql/udf/ptf/MatchPath.class: npath/matchpath, the
+pre-MATCH_RECOGNIZE row-pattern surface).
 
 The reference walks each PTF partition's ordered rows with a symbol
 automaton compiled from a pattern string like ``LATE.EARLY*.ONTIME``
 (symbols are boolean row-predicates; ``.`` chains; ``*``/``+``/``?``
-quantify; ``|`` alternates) and, for every row where a match STARTS,
-emits the row plus match metadata.
+and ``{m,n}`` quantify; ``|`` alternates) and, for every row where a
+match STARTS, emits the row plus match metadata.
 
-Spark-first layout (the plan a 100 TB run wants):
+Here one ``CASE`` expression maps each row to one symbol character
+(JVM-side, inside whole-stage codegen), one shuffle on the partition
+key groups each entity's rows, and the pattern, parsed once by
+``_parse_ast``, runs on one of three plans chosen by ``_route``:
 
-1. **Classify JVM-side**: one ``CASE`` expression maps each row to a
-   single symbol character — stays in whole-stage codegen, no Python.
-2. **One shuffle** on the partition key groups each entity's (bounded)
-   row sequence; an explicit per-partition sort delivers
-   (key, order)-sorted Arrow batches.
-3. **mapInPandas automaton** (round 11 — was per-group applyInPandas,
-   whose O(n_keys) per-group UDF invocation cost 7-9x the actual
-   matching at 1,500 keys and dominates at clickstream cardinality):
-   per ~10k-row Arrow batch, a vectorized pandas groupby slices the
-   key groups (boundary groups carried between batches), each group's
-   symbol chars form a string, and the compiled pattern — translated
-   to an anchored Python regex — is tested at every position (greedy,
-   leftmost-longest at each start, exactly the reference's per-row
-   "does a match begin here" semantics). Never row-at-a-time, never
-   per-group invocation.
+1. **lead chain** (finite patterns): each start row reads its next
+   K-1 symbol chars through ``lead()`` and one ``coalesce(when(...))``
+   tries the concrete branches in regex-backtracking order;
+2. **island walk** (flat chains with an unbounded quantifier): runs of
+   equal segment ids are islands, and each start row checks its
+   successor islands' ids and lengths, all in window expressions;
+3. **automaton** (everything else): ``mapInPandas`` over the sorted
+   Arrow batches tests the pattern, translated to a Python regex, at
+   every possible start position of each key's symbol string.
 
-The DuckDB oracle reproduces the identical semantics declaratively:
-``string_agg`` builds the same per-entity symbol string and
-``regexp_extract('^...')`` anchors the same greedy regex at every
-position — so the value hash verifies the automaton, not just counts.
+All three emit greedy, leftmost-longest matches at each start row,
+the reference's per-row "does a match begin here" semantics. The
+DuckDB oracle reproduces them declaratively: ``string_agg`` builds
+the same per-entity symbol string and ``regexp_extract('^...')``
+anchors the same greedy regex at every position.
 """
 
 from __future__ import annotations
@@ -57,15 +55,14 @@ def compile_pattern(pattern: str, symbol_order: Iterable[str]) -> tuple[dict[str
 
     Grammar (the reference MatchPath surface): symbol names chained
     with ``.``, postfix quantifiers ``* + ?`` and bounded ``{m}`` /
-    ``{m,}`` / ``{m,n}`` (round 9), grouping ``( )`` and alternation
-    ``|``. Symbols are assigned one character each in
-    ``symbol_order``; the regex matches over the per-row symbol-char
-    string. Rows matching no symbol get the reserved char ``'x'``,
-    which no pattern element can match.
+    ``{m,}`` / ``{m,n}``, grouping ``( )`` and alternation ``|``.
+    Symbols are assigned one character each in ``symbol_order``; the
+    regex matches over the per-row symbol-char string. Rows matching
+    no symbol get the reserved char ``'x'``, which no pattern element
+    can match.
     """
-    # allocate from a generator that SKIPS the reserved no-symbol char
-    # 'x' (the old per-index bump collided: symbol 24 and symbol 25
-    # both mapped to 'y'); spill past 'z' into other printable chars
+    # the alphabet skips the reserved no-symbol char 'x' and spills
+    # past 'z' into the upper case, so no two symbols share a char
     alphabet = [
         c
         for c in map(chr, range(ord("a"), ord("z") + 1))
@@ -93,9 +90,9 @@ _INF = 10**9  # "unbounded" sentinel for segment max-counts
 
 def _quant_bounds(q: str) -> tuple[int, int] | None:
     """Quantifier token -> (min, max) row counts; None if malformed
-    (lo > hi routes to the Python automaton, whose re.compile raises
-    the natural error)."""
-    fixed = {"1": (1, 1), "?": (0, 1), "*": (0, _INF), "+": (1, _INF)}
+    (lo > hi routes to the automaton, whose re.compile raises the
+    natural error)."""
+    fixed = {"?": (0, 1), "*": (0, _INF), "+": (1, _INF)}
     if q in fixed:
         return fixed[q]
     m = re.fullmatch(r"\{(\d+)(,(\d*))?\}", q)
@@ -111,120 +108,48 @@ def _quant_bounds(q: str) -> tuple[int, int] | None:
     return (lo, hi) if lo <= hi else None
 
 
-def _parse_chain(
-    pattern: str,
-) -> list[tuple[str | tuple[str, ...], str]] | None:
-    """Detect the JVM-compilable chain class (round 9 widened): a
-    ``.``-chain of atoms — a literal symbol OR a flat alternation
-    group of literals ``(a|b|c)`` — each optionally quantified by
-    ``* + ?`` or bounded ``{m}``/``{m,}``/``{m,n}``. A min-0 FIRST
-    atom is allowed since round 10b: the variants' first segments then
-    differ, and _matchpath_jvm_chain widens its candidate filter to
-    the union of first groups while gating each variant on the row's
-    own group id (char-sets are disjoint, so exactly one variant
-    family applies per row); trailing quantifiers are fine —
-    _chain_variants' final-segment gate enforces the one real engine
-    constraint (merged final max count in {1, unbounded}), and the
-    caller additionally requires the atoms' char-sets to be pairwise
-    disjoint (the island key must be well-defined per row). Returns
-    the token list [(atom, quant)] with atom a symbol name or a
-    sorted tuple of group member names and quant the raw quantifier
-    token, or None (route to the automaton)."""
-    toks = _TOKEN_RE.findall(pattern.replace(".", " "))
-    if not toks:
-        return None
-
-    def _is_name(t: str) -> bool:
-        return t not in "*+?()|" and not t.startswith("{")
-
-    out: list[tuple[str | tuple[str, ...], str]] = []
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if _is_name(t):
-            atom: str | tuple[str, ...] = t
-            i += 1
-        elif t == "(":
-            names: list[str] = []
-            j = i + 1
-            expect_name = True
-            while j < len(toks) and toks[j] != ")":
-                if expect_name and _is_name(toks[j]):
-                    names.append(toks[j])
-                elif not expect_name and toks[j] == "|":
-                    pass
-                else:
-                    return None  # nested group / stray token
-                expect_name = not expect_name
-                j += 1
-            if j >= len(toks) or expect_name or len(names) < 2:
-                return None
-            atom = tuple(sorted(set(names)))
-            i = j + 1
-        else:
-            return None  # dangling quantifier or stray | )
-        q = "1"
-        if i < len(toks) and (toks[i] in "*+?" or toks[i].startswith("{")):
-            q = toks[i]
-            i += 1
-            if _quant_bounds(q) is None:
-                return None
-        out.append((atom, q))
-    if not out:
-        return None
-    # every min-0 token doubles the variant space; keep it bounded
-    if sum(1 for _, q in out if _quant_bounds(q)[0] == 0) > 6:
-        return None
-    return out
-
-
 def _chain_variants(
-    tokens: list[tuple[str, str]],
-) -> list[list[tuple[str, int, int]]] | None:
-    """Expand a token chain into its concrete island-segment variants,
-    in greedy (regex-backtracking) preference order.
+    atoms: list[tuple[frozenset[str], int, int]],
+) -> list[list[tuple[frozenset[str], int, int]]] | None:
+    """Expand a flat chain of ``(charset, min, max)`` atoms into its
+    concrete island-segment variants, in greedy (regex-backtracking)
+    preference order.
 
-    Each '*' / '?' token is either PRESENT (consuming >= 1 row; '?'
-    exactly 1) or ABSENT — ``a*`` is exactly ``epsilon | a+``.  For a
-    given presence choice, adjacent same-char tokens merge into one
-    SEGMENT with summed (min, max) row counts: a maximal run of equal
-    chars in the row stream is one island, and a segment consumes only
-    within one island because its neighbors' chars differ.  Merging is
-    also what makes the backtracking cases exact — ``a.b*.b``'s
-    b*-present variant becomes segment b:(2, inf), whose greedy
-    consumption of the whole island length IS the regex's "maximal b*
-    then give one back" (the b*-absent variant is b:(1, 1)).
+    Each min-0 atom is either PRESENT (consuming >= 1 row; ``?``
+    exactly 1) or ABSENT: ``a*`` is exactly ``epsilon | a+``. For a
+    given presence choice, adjacent atoms with the same charset merge
+    into one SEGMENT with summed (min, max) row counts: a maximal run
+    of one segment's chars in the row stream is one island, and a
+    segment consumes only within one island because its neighbors'
+    charsets are disjoint from it. Merging is also what makes the
+    backtracking cases exact: ``a.b*.b``'s b*-present variant becomes
+    segment b:(2, inf), whose greedy consumption of the whole island
+    IS the regex's "maximal b* then give one back" (the b*-absent
+    variant is b:(1, 1)).
 
     Preference order: itertools.product with present > absent and the
-    LEFTMOST optional as the most significant choice — the same order
+    LEFTMOST optional as the most significant choice, the same order
     a backtracking regex engine explores (latest choice point flipped
-    first).  First matching variant per start row wins.
-
-    Bounded final segments (finite max > 1) are fine since round 9:
-    _matchpath_jvm_chain detects them and fetches the end timestamp by
-    the rn-identity equi-join instead of the island frame."""
+    first). The first matching variant per start row wins."""
     from itertools import product
 
-    opt = [
-        i for i, (_, q) in enumerate(tokens) if _quant_bounds(q)[0] == 0
-    ]
-    variants: list[list[tuple[str, int, int]]] = []
+    opt = [i for i, (_, lo, _) in enumerate(atoms) if lo == 0]
+    variants: list[list[tuple[frozenset[str], int, int]]] = []
     seen: set[tuple] = set()
     for mask in product([True, False], repeat=len(opt)):
         present = dict(zip(opt, mask))
-        segs: list[tuple[str, int, int]] = []
-        for i, (ch, q) in enumerate(tokens):
-            qlo, qhi = _quant_bounds(q)
+        segs: list[tuple[frozenset[str], int, int]] = []
+        for i, (cs, qlo, qhi) in enumerate(atoms):
             if qlo == 0 and not present[i]:
                 continue
-            # a PRESENT min-0 quantifier consumes >= 1 row ('?' is
-            # exactly one; '*' is '+'; '{0,n}' is '{1,n}')
+            # a PRESENT min-0 atom consumes >= 1 row ('?' is exactly
+            # one; '*' is '+'; '{0,n}' is '{1,n}')
             lo, hi = max(qlo, 1), qhi
-            if segs and segs[-1][0] == ch:
+            if segs and segs[-1][0] == cs:
                 plo, phi = segs[-1][1], segs[-1][2]
-                segs[-1] = (ch, plo + lo, min(phi + hi, _INF))
+                segs[-1] = (cs, plo + lo, min(phi + hi, _INF))
             else:
-                segs.append((ch, lo, hi))
+                segs.append((cs, lo, hi))
         key = tuple(segs)
         if not segs or key in seen:
             continue
@@ -233,78 +158,18 @@ def _chain_variants(
     return variants or None
 
 
-# bounds for the overlapping-set lead-chain compiler (round 10): K is
-# the lead depth (sum of the pattern's max counts — each lead is one
-# cheap 1-char/1-ts column over the already-sorted window), COMPS the
-# distinct offset->charset signatures (each is one boolean conjunction
-# inside a single coalesce). Round 11: the COMPS cap is MEASURED, not
-# asserted (tools/scale_probe.py --lead-caps; SCALE.md lead-chain
-# table), and it moved TWICE in one round as the measurements came in:
-# against the old per-group applyInPandas automaton the crossover sat
-# at ~256 branches; after the automaton's mapInPandas rewrite (flat
-# ~1.2 s on the x8 replica at ANY branch count — its cost was per-key
-# invocation overhead, not matching) the dense-family crossover is
-# 16-32 branches (compiled 1.4x faster at 8, ~even at 16-32, 2.3x
-# SLOWER at 64, 34x at 1024 where the coalesce blows the JVM's 64 KB
-# generated-method limit and drops to interpreted evaluation). Cap =
-# 32: the break-even edge, keeping the JVM plan through the noise band
-# because at equal wall time the Python-free plan is strictly
-# preferable at cluster scale (no per-executor Python worker fleet,
-# no Arrow boundary, no codegen-size cliff). Sparse-start patterns
-# favor the compiled plan longer (the coalesce only evaluates on
-# candidate rows); the cap is set on the dense family = compiled
-# plan's worst case.
+# Lead-chain caps. K is the lead depth (the longest branch; each lead
+# is one 1-char and one timestamp column over the already-sorted
+# window); COMPS is the number of distinct branches, each one boolean
+# conjunction inside a single coalesce. COMPS is set from a measured
+# crossover (SCALE.md, lead-chain branch caps): on the dense-start
+# family the compiled plan is faster than the automaton at 8 branches,
+# about even at 16-32, 2.3x slower at 64 and 34x slower at 1024, where
+# the coalesce passes the JVM's 64 KB generated-method limit and runs
+# interpreted. 32 is the break-even edge; at equal wall time the plan
+# without a Python stage is preferred.
 _LEAD_MAX_K = 16
 _LEAD_MAX_COMPS = 32
-
-
-def _lead_compositions(
-    tokens: list[tuple[frozenset[str], str]],
-) -> tuple[list[list[frozenset[str]]], int] | None:
-    """Expand a FINITE-bounded token chain into concrete per-offset
-    charset sequences, in greedy (regex-backtracking) preference
-    order — the compilation for patterns whose char-sets OVERLAP, where
-    the island walk's per-row group id is undefined (round 10).
-
-    A chain of independent bounded quantifiers ``C1{a1,b1}...Cm{am,bm}``
-    backtracks in lexicographic-descending count order (the leftmost
-    quantifier is maximal first, the rightmost choice point flips
-    first), so enumerating count vectors with itertools.product over
-    ``range(hi, lo-1, -1)`` reproduces the engine's exploration order
-    exactly; the first composition whose per-offset membership holds
-    at a start row IS the regex's greedy match there. Different count
-    vectors can induce the same offset->charset sequence (adjacent
-    equal sets); later duplicates are unreachable branches and are
-    dropped. Returns (compositions, K = max total length), or None if
-    any quantifier is unbounded or the caps are exceeded."""
-    from itertools import product
-
-    bounds = []
-    n_comps = 1
-    total_hi = 0
-    for _, q in tokens:
-        lo, hi = _quant_bounds(q)
-        if hi == _INF:
-            return None
-        bounds.append((lo, hi))
-        n_comps *= hi - lo + 1
-        total_hi += hi
-    if total_hi > _LEAD_MAX_K or n_comps > _LEAD_MAX_COMPS:
-        return None
-    comps: list[list[frozenset[str]]] = []
-    seen: set[tuple] = set()
-    for counts in product(
-        *[range(hi, lo - 1, -1) for lo, hi in bounds]
-    ):
-        offsets = [
-            cs for (cs, _), c in zip(tokens, counts) for _ in range(c)
-        ]
-        key = tuple(offsets)
-        if not offsets or key in seen:
-            continue
-        seen.add(key)
-        comps.append(offsets)
-    return (comps, total_hi) if comps else None
 
 
 class _TooBig(Exception):
@@ -313,10 +178,8 @@ class _TooBig(Exception):
 
 
 def _parse_ast(pattern: str):
-    """Parse the FULL MatchPath pattern grammar into an AST — the
-    round-10b front-end for patterns the flat chain parser rejects
-    (nested groups ``(a.(b|c))``, alternation of SEQUENCES
-    ``(a.b|c)``, top-level alternation). Grammar::
+    """Parse a MatchPath pattern into an AST, the one front end every
+    plan is built from. Grammar::
 
         expr := seq ('|' seq)*
         seq  := atom+
@@ -385,14 +248,31 @@ def _parse_ast(pattern: str):
     return ast if ast is not None and pos[0] == len(toks) else None
 
 
+def _flat_atoms(
+    ast, chars: dict[str, str]
+) -> list[tuple[frozenset[str], int, int]] | None:
+    """The AST as a flat chain of ``(charset, min, max)`` atoms, or
+    None unless it is a ``seq`` (or a single atom) of ``sym`` /
+    ``quant(sym)`` nodes — the only shape the island walk keys."""
+    atoms = []
+    for node in ast[1] if ast[0] == "seq" else [ast]:
+        lo = hi = 1
+        if node[0] == "quant":
+            _, node, lo, hi = node
+        if node[0] != "sym":
+            return None
+        atoms.append((frozenset(chars[n] for n in node[1]), lo, hi))
+    return atoms
+
+
 def _ast_first_chars(ast, chars: dict[str, str]) -> set[str]:
     """The pattern's FIRST set — every symbol char that can begin a
     NONEMPTY match — by the textbook FIRST/nullable recursion over the
-    _parse_ast node shapes (r13; used by the automaton fallback to
-    skip start positions that cannot match without invoking the regex
-    engine). Exact for the automaton's purposes: empty matches are
-    discarded there regardless, and any nonempty match consumes its
-    first row's char, which by construction is in this set."""
+    _parse_ast node shapes (the automaton skips start positions whose
+    char is outside it without invoking the regex engine). Exact for
+    the automaton's purposes: empty matches are discarded there
+    regardless, and any nonempty match consumes its first row's char,
+    which by construction is in this set."""
 
     def _walk(node) -> tuple[set[str], bool]:
         kind = node[0]
@@ -425,8 +305,7 @@ def _ast_first_chars(ast, chars: dict[str, str]) -> set[str]:
 
 def _enum_ast(ast, chars: dict[str, str]):
     """Expand a FINITE AST into concrete per-offset charset sequences
-    in exact regex-backtracking order — the round-10b generalization
-    of _lead_compositions to nested groups and sequence alternation.
+    (the lead chain's branches) in exact regex-backtracking order.
 
     Order correctness: a backtracking engine explores complete
     candidate shapes in DFS order where the LATEST choice point is
@@ -449,10 +328,9 @@ def _enum_ast(ast, chars: dict[str, str]):
     discards (m.end() > i) — so every branch after the first empty
     composition is unreachable and the list truncates there
     (``(c?|a)`` matches nothing at an ``a`` row: c? returns empty
-    before the a-branch is ever tried; fuzz-caught in round 10b —
-    plain drop-the-empties emits the unreachable branches). The flat
-    expansions never hit this because their empty variant — all
-    optionals absent / all counts zero — is always LAST in preference
+    before the a-branch is ever tried; dropping the empties instead
+    would emit the unreachable branches). A flat chain's empty
+    composition, all optionals absent, is always LAST in preference
     order, where truncation and dropping coincide. Returns
     (compositions, K = max length) or None when any quantifier is
     unbounded or the _LEAD_MAX_K / _LEAD_MAX_COMPS caps are hit."""
@@ -531,32 +409,25 @@ def _enum_ast(ast, chars: dict[str, str]):
 
 def _matchpath_jvm_leadchain(
     slim: DataFrame,
-    order_cols: list,  # str names or direction-aware Columns (r12)
+    order_cols: list,  # str names or direction-aware Columns
     partition_by: str,
     comps: list[list[frozenset[str]]],
     k_max: int,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Bounded-length chains with OVERLAPPING char-sets compiled to a
-    pure lead-chain window plan — no Python stage, no join at all
-    (round 10; closes the round-9 verdict's 'most common irregular
-    shape' automaton gap). Where the island walk keys rows to ONE
-    segment group (impossible when sets overlap — a row with char c
-    could belong to ``(b|c)`` and ``(c|d)`` at once), this plan checks
-    membership PER OFFSET: each candidate start row sees its next
-    K−1 symbol chars and timestamps via lead() over the same per-key
-    sort the automaton would need anyway, and each concrete
-    composition (one regex backtracking branch) is a conjunction of
-    ``lead(_ch, p) ∈ set`` terms picked in greedy preference order by
-    a single coalesce(when(...)). A null lead (partition end) makes
-    the conjunction null, never true, so matches cannot overrun the
-    key's sequence.
+    """A finite pattern compiled to a lead-chain window plan, with no
+    Python stage and no join. Membership is checked PER OFFSET, so
+    charsets may overlap (a row with char c can serve ``(b|c)`` and
+    ``(c|d)`` alike): each candidate start row sees its next K−1
+    symbol chars and timestamps via lead() over the per-key sort, and
+    each concrete composition (one regex backtracking branch) is a
+    conjunction of ``lead(_ch, p) ∈ set`` terms, picked in greedy
+    preference order by a single coalesce(when(...)). A null lead
+    (partition end) makes the conjunction null, never true, so matches
+    cannot overrun the key's sequence.
 
-    100 TB reading: ONE sort-shuffle on the partition key, then
-    everything is a projection over at most _LEAD_MAX_K tiny lead
-    columns inside whole-stage codegen — strictly less machinery than
-    the island walk (no island aggregation, no join back), available
-    exactly when the pattern's total max length is finite."""
+    ONE sort-shuffle on the partition key, then a projection over at
+    most _LEAD_MAX_K lead columns inside whole-stage codegen."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("pk").orderBy(*order_cols)
@@ -608,78 +479,58 @@ def _matchpath_jvm_leadchain(
 
 def _matchpath_jvm_chain(
     slim: DataFrame,
-    order_cols: list,  # str names or direction-aware Columns (r12)
+    order_cols: list,  # str names or direction-aware Columns
     partition_by: str,
     variants: list[list[tuple[str, int, int]]],
     group_of: dict[str, str],
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """A literal symbol chain compiled to pure window expressions —
-    no Python stage anywhere, and since round 14 no join and no
-    aggregate either (the analog of keeping the reference's MatchPath
-    inside the PTFOperator instead of shelling out;
-    hive-exec!ql/udf/ptf/MatchPath.class is the capability being
-    matched). Shape:
+    """A flat segment chain compiled to window expressions (the island
+    walk): no Python stage, no join and no aggregate. Shape:
 
-    - each row's symbol char maps to its segment GROUP id (round 9:
-      an alternation group ``(b|c)`` is one segment whose char-set is
-      {b, c}; the caller guarantees the pattern's char-sets are
-      pairwise disjoint, so the group id is well-defined per row — a
-      plain char is its own singleton group). The mapping is a single
-      ``translate()``, and chars outside every set pass through
-      unchanged, so they form their own islands and can never satisfy
-      a segment condition;
-    - runs of equal group ids are islands. r14 (guide §2.4 — fewer
-      passes over the same exchange): instead of materializing an
-      island FRAME (a second (pk, _g)-keyed window pass + groupBy +
-      a join back to the candidate rows — 2 scans, 2 exchanges,
-      4 sorts in the executed plan), every island attribute is now
-      derived per ROW on the ONE (pk, order) sort. Each island's
+    - each row's symbol char maps to its segment GROUP id: a group
+      ``(b|c)`` is one segment whose char-set is {b, c}, and the
+      caller guarantees the pattern's char-sets are pairwise disjoint,
+      so the id is well-defined per row (a plain char is its own
+      singleton group). The mapping is a single ``translate()``;
+      chars outside every set pass through unchanged, so they form
+      their own islands and never satisfy a segment condition;
+    - runs of equal group ids are islands, and every island attribute
+      is derived per ROW on the one (pk, order) sort. Each island's
       first row carries a marker struct ``__s0`` = (start rn, group,
       first ts, PREVIOUS island's last ts — the row right before an
-      island start is the previous island's last row); any row then
-      sees its k-th successor island as ``lead(__s0, k) IGNORE
-      NULLS`` (skipping non-start rows — amortized-linear in Spark's
-      offset frame, measured flat on 100k-row islands), and the two
-      partition-level aggregates (row count, last ts) close the
-      final-island lengths. Island k's length = (island k+1's start
-      rn, or partition count + 1) − its own start rn; its last ts =
-      island k+1's prev-last-ts, or the partition's last ts,
-    - every row of the chain's first group is a candidate start; its
+      island start is the previous island's last row); any row sees
+      its k-th successor island as ``lead(__s0, k) IGNORE NULLS``
+      (skipping non-start rows), and two partition-level aggregates
+      (row count, last ts) close the final island. Island k's length
+      = (island k+1's start rn, or partition count + 1) − its own
+      start rn; its last ts = island k+1's prev-last-ts, or the
+      partition's last ts;
+    - every row of a variant's first group is a candidate start; its
       remainder rem = rows left in its own island is segment 1's
       forced consumption, successor island j must carry segment j+1's
       group with length inside that segment's (min, max), and the
-      FINAL segment consumes min(max, island length) — greedy, exact,
-      because adjacent segments' char-sets are disjoint so a segment
-      can never stop short of its island's end except at the very end
-      of the match (the argument is unchanged from the single-char
-      case: every row of an island belongs to the segment's set and
-      to no neighbor's),
+      FINAL segment consumes one row (max 1) or its whole island
+      (unbounded) — greedy and exact, because adjacent segments'
+      char-sets are disjoint, so a segment can never stop short of its
+      island's end except at the very end of the match;
     - variants are tried in regex-backtracking preference order via
-      one coalesce(when(...)) chain per output column,
-    - the match's END timestamp comes straight from the successor
-      structs (final island's first/last ts) when every variant's
-      final segment has max count 1 or unbounded; a BOUNDED final
-      segment (round 9 — e.g. ``b{2,3}``) can stop mid-island, so
-      those patterns fetch the end row by the identity end_rn =
-      start_rn + match_len − 1 (segments consume contiguous rn
-      ranges) with ONE extra (pk, rn) equi-join against the row frame
-      — still zero Python; the join only appears for patterns that
-      need it.
+      one coalesce(when(...)) per output column, and the match's END
+      timestamp is the final island's first or last ts.
 
     ONE sort-shuffle on the partition key, two Window passes over it
-    (markers, then their leads), then pure projections — every stage
-    JVM-side, Arrow never touched, no second scan of the input."""
+    (markers, then their leads), then pure projections."""
     from pyspark.sql import Window
 
     src = "".join(group_of)
     dst = "".join(group_of[c] for c in group_of)
     slim = slim.withColumn("_g", F.translate("_ch", src, dst))
-    # a min-0 FIRST atom (round 10b) makes variants start in different
-    # groups: candidates widen to the union of first groups, and each
-    # variant's condition gains a `_g == its-own-first-group` gate (the
-    # char-sets are disjoint, so exactly one gate holds per row and the
-    # coalesce preference order within that row's variants is intact)
+    # a min-0 FIRST atom makes variants start in different groups:
+    # candidates widen to the union of first groups, and each
+    # variant's condition gains a `_g == its-own-first-group` gate
+    # (the char-sets are disjoint, so exactly one gate holds per row
+    # and the coalesce preference order within that row's variants is
+    # intact)
     first_groups = sorted({v[0][0] for v in variants})
     multi_start = len(first_groups) > 1
     k_lead = max(len(v) for v in variants) - 1
@@ -724,7 +575,7 @@ def _matchpath_jvm_chain(
     def _succ(k: int):
         """Per-row columns of the k-th successor island (k >= 1):
         group char, length, first/last ts — null wherever island k
-        does not exist, exactly like the old island-frame leads."""
+        does not exist."""
         sk, sk1 = F.col(f"__s{k}"), F.col(f"__s{k + 1}")
         nxt_start = F.when(sk1.isNotNull(), sk1["srn"]).otherwise(
             F.col("__n_all") + 1
@@ -759,11 +610,6 @@ def _matchpath_jvm_chain(
     )
     rem = F.col("i_end") - F.col("rn") + 1
 
-    # a BOUNDED final segment (finite max > 1) can stop mid-island, so
-    # its end timestamp is not in the island frame — those patterns
-    # fetch it via end_rn = rn + match_len - 1 (one extra equi-join)
-    end_join = any(v[-1][2] != _INF and v[-1][2] > 1 for v in variants)
-
     def _gate(ch0, cond):
         return (F.col("_g") == ch0) & cond if multi_start else cond
 
@@ -777,10 +623,8 @@ def _matchpath_jvm_chain(
             cond = rem >= lo0
             if hi0 == _INF:
                 length, end_ts = rem, F.col("i_last_ts")
-            elif hi0 == 1:
+            else:
                 length, end_ts = F.lit(1), F.col("_ts")
-            else:  # bounded: end via the rn-identity join
-                length, end_ts = F.least(F.lit(hi0), rem), None
             return _gate(ch0, cond), length.cast("long"), end_ts
         # segment 2's char differs, so segment 1 must consume the whole
         # island remainder: rem itself must sit inside (min, max)
@@ -799,61 +643,26 @@ def _matchpath_jvm_chain(
         if him == _INF:  # greedy: eat the whole final island
             length = length + F.col(f"n_{k}")
             end_ts = F.col(f"lts_{k}")
-        elif him == 1:
+        else:
             length = length + F.lit(1)
             end_ts = F.col(f"fts_{k}")
-        else:  # bounded: greedy min(max, island len), end via join
-            length = length + F.least(F.lit(him), F.col(f"n_{k}"))
-            end_ts = None
         return _gate(ch0, cond), length.cast("long"), end_ts
 
-    parts = [_variant(v) for v in variants]
-    if not end_join:
-        pick = F.coalesce(
-            *[
-                F.when(c, F.struct(ln.alias("l"), e.alias("e")))
-                for c, ln, e in parts
-            ]
-        )
-        return (
-            cand.select("pk", "rn", "_ts", *passthrough, pick.alias("m"))
-            .where(F.col("m").isNotNull())
-            .select(
-                F.col("pk").alias(partition_by),
-                F.col("rn").cast("int").alias("start_rn"),
-                F.col("m.l").cast("int").alias("match_len"),
-                F.col("_ts").alias("path_start"),
-                F.col("m.e").alias("path_end"),
-                *passthrough,
-            )
-        )
-    # bounded-final mode: segments consume CONTIGUOUS rn ranges, so
-    # end_rn = rn + match_len - 1 holds for every variant — one narrow
-    # (pk, rn) equi-join fetches the end row's timestamp
-    pick = F.coalesce(*[F.when(c, ln) for c, ln, _ in parts])
-    matched = cand.select(
-        "pk", "rn", "_ts", *passthrough, pick.alias("l")
-    ).where(F.col("l").isNotNull())
-    ends = rows.select(
-        F.col("pk").alias("__e_pk"),
-        F.col("rn").alias("__e_rn"),
-        F.col("_ts").alias("end_ts"),
+    pick = F.coalesce(
+        *[
+            F.when(c, F.struct(ln.alias("l"), e.alias("e")))
+            for c, ln, e in (_variant(v) for v in variants)
+        ]
     )
     return (
-        matched.withColumn("ern", F.col("rn") + F.col("l") - 1)
-        .join(
-            # null-safe on pk (round 12) — same reasoning as the
-            # island join above; ern is never null
-            ends,
-            F.col("pk").eqNullSafe(F.col("__e_pk"))
-            & (F.col("ern") == F.col("__e_rn")),
-        )
+        cand.select("pk", "rn", "_ts", *passthrough, pick.alias("m"))
+        .where(F.col("m").isNotNull())
         .select(
             F.col("pk").alias(partition_by),
             F.col("rn").cast("int").alias("start_rn"),
-            F.col("l").cast("int").alias("match_len"),
+            F.col("m.l").cast("int").alias("match_len"),
             F.col("_ts").alias("path_start"),
-            F.col("end_ts").alias("path_end"),
+            F.col("m.e").alias("path_end"),
             *passthrough,
         )
     )
@@ -884,10 +693,9 @@ def _sort_col(expr: str, src: str) -> Column:
     """Resolve one parsed order expression to a Column. A plain
     identifier resolves via F.col — so a direct-API caller whose column
     NAME is a SQL reserved word (`order`, `select`) keeps working, where
-    F.expr would try to parse it (round-12 ADVICE) — anything else via
-    F.expr. An empty parse (a name _split_order_suffix consumed
-    entirely as direction tokens) raises instead of silently building
-    an empty expression."""
+    F.expr would try to parse it — anything else via F.expr. An empty
+    parse (a name _split_order_suffix consumed entirely as direction
+    tokens) raises instead of silently building an empty expression."""
     if not expr:
         raise ValueError(
             f"matchpath: order item {src!r} parsed to an empty "
@@ -914,65 +722,35 @@ def _order_key(col: Column, desc: bool, nulls: str | None) -> Column:
 def _route(
     pattern: str, chars: dict[str, str]
 ) -> tuple[str, tuple | None]:
-    """The ONE plan-routing decision, shared by matchpath() (which
+    """The one plan-routing decision, shared by matchpath() (which
     executes it) and npath_sql (which asks it to pick the composite-key
-    packing — a struct key for compiled classes, a serialized string
-    for the automaton, r14). Returns ("chain", (variants, group_of)),
-    ("lead", (comps, k_max)) or ("automaton", None); the class
-    boundaries are documented on matchpath() below.
-
-    Chain class: the island key is only well-defined when the
-    pattern's DISTINCT char-sets are pairwise disjoint (identical sets
-    share a group; an overlap like a vs (a|b) would make one row
-    belong to two groups -> lead chain / automaton)."""
-    chain = _parse_chain(pattern)
-    if chain is not None:
-        csets = [
-            frozenset(
-                chars[n]
-                for n in ((atom,) if isinstance(atom, str) else atom)
-            )
-            for atom, _ in chain
-        ]
-        distinct = set(csets)
-        disjoint = all(
-            a == b or not (a & b) for a in distinct for b in distinct
-        )
-        if disjoint:
-            variants = _chain_variants(
-                [(cs, q) for cs, (_, q) in zip(csets, chain)]
-            )
-            if variants is not None:
-                # one representative char per group; translate() maps
-                # every member char onto it
-                group_of = {
-                    c: min(cs) for cs in distinct for c in sorted(cs)
-                }
-                variants = [
-                    [(min(cs), lo, hi) for cs, lo, hi in segs]
-                    for segs in variants
-                ]
-                return "chain", (variants, group_of)
-        # overlapping char-sets (or an island-variant blowup): the
-        # round-10 lead-chain compiler covers any FINITE-max chain —
-        # per-offset membership checks replace the per-row group id
-        # the island walk needs (see _matchpath_jvm_leadchain)
-        lead = _lead_compositions(
-            [(cs, q) for cs, (_, q) in zip(csets, chain)]
-        )
-        if lead is not None:
-            return "lead", lead
-    # round 10b: anything the flat chain parser rejects but whose FULL
-    # grammar AST expands to a finite branch set — nested groups,
-    # alternation of sequences, top-level alternation — compiles to
-    # the same lead-chain plan via the exact-backtracking-order
-    # enumerator (see _parse_ast/_enum_ast)
+    packing). Returns ("lead", (comps, k_max)), ("chain", (variants,
+    group_of)) or ("automaton", None); the rule is stated on
+    matchpath()."""
     ast = _parse_ast(pattern)
-    if ast is not None:
-        fin = _enum_ast(ast, chars)
-        if fin is not None:
-            return "lead", fin
-    return "automaton", None
+    if ast is None:
+        return "automaton", None
+    lead = _enum_ast(ast, chars)
+    if lead is not None:
+        return "lead", lead
+    atoms = _flat_atoms(ast, chars)
+    if atoms is None or sum(lo == 0 for _, lo, _ in atoms) > 6:
+        return "automaton", None
+    # the island key is only well-defined when the DISTINCT char-sets
+    # are pairwise disjoint (identical sets share a group)
+    distinct = {cs for cs, _, _ in atoms}
+    if any(a != b and a & b for a in distinct for b in distinct):
+        return "automaton", None
+    variants = _chain_variants(atoms)
+    if variants is None or any(v[-1][2] not in (1, _INF) for v in variants):
+        return "automaton", None
+    # one representative char per group; translate() maps every
+    # member char onto it
+    group_of = {c: min(cs) for cs in distinct for c in sorted(cs)}
+    variants = [
+        [(min(cs), lo, hi) for cs, lo, hi in segs] for segs in variants
+    ]
+    return "chain", (variants, group_of)
 
 
 def matchpath(
@@ -987,72 +765,46 @@ def matchpath(
 ) -> DataFrame:
     """Generic MatchPath over any DataFrame.
 
-    ``force_automaton=True`` skips the JVM chain compiler and runs the
-    Arrow automaton even for compilable patterns — measurement/testing
-    only (tools/scale_probe.py's compiled-vs-automaton cost line and
-    direct path-equivalence tests); never set in registered queries.
-
-    ``passthrough`` (round 11, verdict #2): extra input columns carried
-    onto each output row, valued from the match's START row — so a flag
-    an upstream pass already stamped (capped_user_prefix's
-    ``user_capped``) rides the matchpath plan instead of forcing the
-    caller to re-scan and re-aggregate the corpus just to join it back.
-    All three plans honor it (island walk, lead chain, automaton).
-
     ``symbols`` maps symbol name -> boolean Column (first match wins,
     like the reference's symbol-arg ordering). Emits one row per match
     start: (partition key, start_rn, match_len, path_start, path_end).
 
-    Any literal ``.``-chain of atoms — a symbol or a flat alternation
-    group ``(b|c)`` — with per-atom ``* + ?`` / ``{m}`` / ``{m,}`` /
-    ``{m,n}`` quantifiers compiles to a pure JVM island-walk plan
-    (_matchpath_jvm_chain) — no Python stage — provided the first
-    atom's min count is >= 1, <= 6 atoms are min-0 optional, and the
-    pattern's distinct char-sets are pairwise disjoint (round 9
-    widened the class from plain ``* + ?`` symbol chains and lifted
-    the round-8 bounded-final-segment gate via the rn-identity end
-    join). Round 10: chains whose char-sets OVERLAP (``(a|b).(b|c)``)
-    also compile — to the lead-chain plan (_matchpath_jvm_leadchain:
-    per-offset membership over <= 16 lead columns, compositions tried
-    in regex-backtracking order) — whenever every quantifier's max is
-    FINITE with total max length <= 16 and <= 32 branches (the cap
-    MEASURED in round 11 — see _LEAD_MAX_COMPS). Round 10b
-    closes two more classes: a min-0 FIRST atom (``a*.b+``) now rides
-    the island walk even when unbounded (candidates widen to the union
-    of variant first groups, each variant gated on the row's own group
-    id), and ANY finite pattern in the FULL grammar — nested groups
-    ``(a.(b|c)){1,2}``, alternation of sequences ``(a.b|c).d``,
-    top-level alternation — compiles to the lead-chain plan via the
-    exact-backtracking-order AST enumerator (_parse_ast/_enum_ast).
-    What still runs the Arrow-batched Python automaton below, and why:
+    Routing (``_route``): the pattern is parsed once by ``_parse_ast``,
+    then
 
-    - an UNBOUNDED quantifier outside the disjoint flat-chain class —
-      over an overlapping set (``(a|b)*.b``) or over a nested group
-      (``(a.b)+.c``): greedy backtracking over an unbounded run has no
-      finite lead depth, and the island key is undefined (a row's char
-      can belong to two segments / the repeated unit spans islands);
-    - a finite pattern past the expression caps (total max length
-      > 16 or > 32 concrete branches): measured in round 11 against
-      the rewritten batch automaton (SCALE.md lead-chain table), the
-      coalesce tree breaks even at 16-32 branches and loses 2.3x at
-      64, 34x at 1024 — past ~512 the generated method blows the
-      JVM's 64 KB codegen limit and falls back to interpreted
-      evaluation. The cap keeps the JVM plan exactly over the regime
-      where it is at-or-better.
+    1. if ``_enum_ast`` expands it to at most ``_LEAD_MAX_COMPS`` (32)
+       branches no longer than ``_LEAD_MAX_K`` (16) rows, it runs on
+       the **lead chain** (_matchpath_jvm_leadchain);
+    2. otherwise, if it is a flat chain of symbol or charset atoms
+       (``(b|c)``), each with an optional quantifier, whose distinct
+       charsets are pairwise disjoint, with at most 6 min-0 atoms, and
+       every variant's final segment has a max of 1 or unbounded, it
+       runs on the **island walk** (_matchpath_jvm_chain);
+    3. otherwise it runs on the **automaton** below: an unbounded
+       quantifier over overlapping charsets (``(a|b)*.b``) or over a
+       group (``(a.b)+.c``), an unbounded chain whose final segment is
+       bounded (``a.b*.c{2,3}``), or a finite pattern past the caps.
 
-    Each is a genuinely irregular or oversized shape; the automaton is
-    the exact fallback, at the measured price in SCALE.md's
-    compiled-vs-automaton section.
+    SCALE.md's MatchPath regime table measures each plan against its
+    fallback: both compiled plans beat the automaton on their own
+    patterns, and on finite patterns the lead chain beats the island
+    walk.
 
-    Round 12: ``order_by`` items accept optional ``ASC``/``DESC`` and
-    ``NULLS FIRST``/``NULLS LAST`` suffixes (``"ts DESC NULLS
-    FIRST"``) — the reference PTF's OrderSpec carries BOTH a per-column
-    direction and a null ordering (hive-exec!ql/parse/
+    ``order_by`` items accept optional ``ASC``/``DESC`` and ``NULLS
+    FIRST``/``NULLS LAST`` suffixes (``"ts DESC NULLS FIRST"``), as
+    the reference PTF's OrderSpec does (hive-exec!ql/parse/
     PTFInvocationSpec); a descending walk is how "latest-first"
     patterns (purchase, then the views that led to it) are expressed.
-    Every plan class honors both: the row numbering, the island/lead
-    windows, and the automaton's partition sort all use the same
-    direction- and nulls-aware keys."""
+    Every plan uses the same direction- and nulls-aware keys.
+
+    ``passthrough`` columns are carried onto each output row, valued
+    from the match's START row, on all three plans — so a flag an
+    upstream pass already stamped (capped_user_prefix's
+    ``user_capped``) rides the match instead of forcing a re-scan.
+
+    ``force_automaton=True`` runs the automaton for any pattern; it
+    is the reference path for tests and measurements, never set in a
+    registered query."""
     chars, rx_src = compile_pattern(pattern, symbols.keys())
     rx = re.compile(rx_src)
 
@@ -1062,12 +814,10 @@ def matchpath(
         ch = F.when(cond, F.lit(chars[name])).otherwise(ch)
 
     order_parsed = [_split_order_suffix(c) for c in order_by]
-    # passthrough columns ride the plans under RESERVED internal
-    # aliases and are renamed back on the way out (round-12 review: a
-    # passthrough — or composite-key — column named `rn`/`isl`/`_g`/...
-    # collided with the island walk's working columns and blew up as
-    # AMBIGUOUS_REFERENCE deep inside the plan; user column names must
-    # never meet plan internals)
+    # passthrough columns ride the plans under reserved internal
+    # aliases and are renamed back on the way out: a passthrough (or
+    # composite-key) column named `rn`/`_g`/... must never meet the
+    # plans' working columns
     pt_alias = tuple(f"__pt{i}" for i in range(len(passthrough)))
     slim = df.select(
         F.col(partition_by).alias("pk"),
@@ -1112,10 +862,8 @@ def matchpath(
             )
         )
 
-    # the key column keeps its INPUT type (round 12: was hardcoded
-    # `long`, which silently restricted the automaton fallback to
-    # integer keys — string keys, and the packed composite key
-    # npath_sql threads for multi-column PARTITION BY, now round-trip)
+    # the key column keeps its INPUT type, so string keys and
+    # npath_sql's packed composite key round-trip
     pk_type = slim.schema["pk"].dataType.simpleString()
     if pk_type.startswith("struct"):
         # the pandas groupby below needs a HASHABLE key; a struct
@@ -1144,31 +892,22 @@ def matchpath(
         *pt_alias,
     ]
 
-    # Round 11: the automaton is mapInPandas over PARTITION-sized Arrow
-    # batches, not applyInPandas per GROUP. Measured at sf0.1 (100k
-    # events, 1,500 users): the pure-Python walk over every user costs
-    # ~1 s single-threaded, but groupBy().applyInPandas() spent 7-9 s
-    # — per-group UDF invocation + per-group frame construction is
-    # O(n_keys) Python overhead, which at clickstream cardinalities
-    # (billions of users) dominates the actual matching by orders of
-    # magnitude. Here one hash exchange + an explicit per-partition
-    # sort deliver (pk, order)-sorted batches; groups are sliced by a
-    # vectorized pandas groupby INSIDE each ~10k-row batch, and a
-    # group spanning a batch boundary is carried into the next batch
-    # (partition-local, order-preserving), so semantics are identical
-    # at any group size.
-
-    # r13 optimization (guide §4.2 do the heavy lifting in native code):
-    # the walk used to call rx.match at EVERY row position; a NONEMPTY
-    # match must consume s[i] as its first char, so only positions
-    # whose char is in the pattern's FIRST set can start one (empty
-    # matches are discarded by the m.end() > i guard either way, so
-    # the filter is exact). Candidate starts come from one C-speed
-    # character-class finditer scan instead of len(s) Python-level
-    # regex calls — on start-sparse patterns (the normal case: an
-    # anchor atom like `signup.` exists precisely to keep start
-    # density sane) most positions never reach the regex engine.
-    # Falls back to the full scan when the AST is unavailable.
+    # The automaton is mapInPandas over partition-sized Arrow batches,
+    # not applyInPandas per group: per-group UDF invocation and frame
+    # construction is O(n_keys) Python overhead, measured at 7-9 s
+    # against ~1 s of matching for 1,500 keys at sf0.1. One hash
+    # exchange and a per-partition sort deliver (pk, order)-sorted
+    # batches; groups are sliced by a pandas groupby inside each
+    # ~10k-row batch, and a group spanning a batch boundary is carried
+    # into the next batch, so semantics are identical at any group
+    # size.
+    #
+    # A NONEMPTY match must consume s[i] as its first char, so only
+    # positions whose char is in the pattern's FIRST set can start one
+    # (empty matches are discarded by the m.end() > i guard either
+    # way, so the filter is exact). Candidate starts come from one
+    # character-class finditer scan instead of len(s) regex calls;
+    # without an AST every position is tried.
     _first_ast = _parse_ast(pattern)
     first_rx = None
     if _first_ast is not None:
@@ -1178,8 +917,8 @@ def matchpath(
     def _walk_groups(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         # dropna=False: a NULL partition key is a group like any other
-        # (the JVM plans keep null window partitions; review finding —
-        # pandas groupby silently drops NaN keys by default)
+        # (the JVM plans keep null window partitions; pandas groupby
+        # drops NaN keys by default)
         for pk, g in pdf.groupby("pk", sort=False, dropna=False):
             g = g.reset_index(drop=True)
             # NaN -> None so the long output column round-trips to a
@@ -1211,8 +950,8 @@ def matchpath(
         # group may continue in the next batch. Kept as a LIST and
         # concatenated once at flush time: re-concatenating a growing
         # carry per batch would make a group spanning many Arrow
-        # batches quadratic in its row count (review finding — the
-        # exact hot-key scenario the per-user budget exists for).
+        # batches quadratic in its row count (the hot-key case the
+        # per-user budget exists for).
         carry: list[pd.DataFrame] = []
 
         def _flush(frames):
@@ -1260,7 +999,7 @@ def matchpath(
 
 # ---------------------------------------------------------------------------
 # registered query: one-or-more views then a purchase (a pattern the
-# fixed-LEAD funnel cannot express — requires the general automaton)
+# fixed-LEAD funnel cannot express)
 # ---------------------------------------------------------------------------
 
 _GENERAL_ORACLE = """
@@ -1299,8 +1038,8 @@ def seq_matchpath_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive views then a purchase) per user — a quantified pattern
     the fixed-LEAD funnel (seq_matchpath_funnel) cannot express. Each
     match start emits (start_rn, greedy match length, path start/end
-    timestamps). See module docstring for the reference parity and the
-    100 TB plan shape."""
+    timestamps). The unbounded ``view*`` routes it to the island walk;
+    see the module docstring for the reference parity."""
     ev = load(spark, sf_dir, "events")
     out = matchpath(
         ev,
@@ -1316,8 +1055,8 @@ def seq_matchpath_general(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: a 4-symbol quantified chain — exercises the round-8
-# general chain compiler (multi-island lookahead), still zero Python
+# registered query: a 4-symbol quantified chain — the island walk's
+# multi-island lookahead, zero Python
 # ---------------------------------------------------------------------------
 
 _CHAIN4_ORACLE = """
@@ -1357,10 +1096,10 @@ ORDER BY m.user_id, start_rn
 def seq_matchpath_chain4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MatchPath over a 4-symbol quantified chain:
     ``signup.view*.click+.purchase`` — a signup, any number of
-    consecutive views, one-or-more clicks, then a purchase. The
-    round-8 general chain compiler routes this to the pure JVM
-    island-walk plan (islands frame + 3-deep lead chain + variant
-    coalesce); the reference automaton (hive-exec!ql/udf/ptf/
+    consecutive views, one-or-more clicks, then a purchase. It runs
+    on the island walk: per-row island markers, their leads up to
+    three successor islands deep, and one variant coalesce, all in
+    window expressions; the reference automaton (hive-exec!ql/udf/ptf/
     MatchPath.class) walks the same NFA row-by-row in Java. The DuckDB
     oracle anchors the identical greedy regex at every row, so the
     value hash verifies match starts, greedy lengths, AND end
@@ -1382,8 +1121,8 @@ def seq_matchpath_chain4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: alternation group + bounded quantifier — the
-# round-9 widened chain class, still zero Python
+# registered query: alternation group + bounded quantifier — a finite
+# pattern on the lead chain, zero Python
 # ---------------------------------------------------------------------------
 
 _ALT_ORACLE = """
@@ -1424,14 +1163,12 @@ def seq_matchpath_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MatchPath with an alternation-group atom AND a bounded
     quantifier: ``signup.(view|click){1,3}.purchase`` — a signup, one
     to three consecutive browse events of EITHER kind, then a
-    purchase (the short-consideration conversion pattern). Round 9
-    widened the JVM chain compiler to this class: the group becomes
-    one island segment whose char-set is {view, click} (rows map to a
-    group id with a single translate(); the pattern's char-sets are
-    pairwise disjoint so the id is well-defined), and the bounded
-    {1,3} is the segment's (min, max) island-length window — the plan
-    is the same pure window-plus-one-equi-join island walk, no Python
-    stage (pinned in test_matchpath_compile.py). Reference surface:
+    purchase (the short-consideration conversion pattern). The pattern
+    is finite (at most five rows, three branches), so it runs on the
+    lead chain: each signup row checks its next rows' chars against
+    {view, click} and {purchase} per offset, longest branch first, in
+    one coalesce with no Python stage (pinned in
+    test_matchpath_compile.py). Reference surface:
     hive-exec!ql/udf/ptf/MatchPath.class (npath symbol patterns allow
     alternation and bounded repetition). The DuckDB oracle anchors
     the identical greedy regex at every row, so the value hash
@@ -1453,8 +1190,8 @@ def seq_matchpath_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: OVERLAPPING alternation sets — the round-10
-# lead-chain compiled class, still zero Python
+# registered query: OVERLAPPING alternation sets on the lead chain,
+# zero Python
 # ---------------------------------------------------------------------------
 
 _OVERLAP_ORACLE = """
@@ -1496,14 +1233,13 @@ def seq_matchpath_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``signup.(view|click){1,2}.(click|purchase){1,2}`` — a signup, one
     or two browse events, then one or two conversion-side events,
     where a CLICK can satisfy either group (the consideration/decision
-    boundary is ambiguous — exactly the shape the island-walk compiler
-    cannot key, because a click row belongs to two segments at once).
-    Round 10 compiles this class to the lead-chain plan
-    (_matchpath_jvm_leadchain): per-offset set membership over lead()
-    columns on the one per-user sort, regex-backtracking branch order
-    via a single coalesce — no Python stage, no join (pinned in
-    test_matchpath_compile.py), closing the round-9 verdict's last
-    common-pattern automaton gap. Reference surface:
+    boundary is ambiguous — the shape the island walk cannot key,
+    because a click row belongs to two segments at once). The
+    lead-chain plan (_matchpath_jvm_leadchain) checks set membership
+    per offset over lead() columns on the one per-user sort, in
+    regex-backtracking branch order via a single coalesce — no Python
+    stage, no join (pinned in test_matchpath_compile.py). Reference
+    surface:
     hive-exec-2.3.10-core.jar!ql/udf/ptf/MatchPath.class (npath symbol
     patterns allow overlapping alternation). The DuckDB oracle anchors
     the identical greedy regex at every row, so the value hash
@@ -1642,8 +1378,7 @@ def seq_matchpath_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: NESTED group — the round-10b AST lead-chain
-# compiled class, still zero Python
+# registered query: NESTED group on the lead chain, zero Python
 # ---------------------------------------------------------------------------
 
 _NESTED_ORACLE = """
@@ -1685,13 +1420,12 @@ def seq_matchpath_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     a quantifier: ``signup.(view.click|click){1,2}.purchase`` — a
     signup, one or two browse UNITS (a unit is a view followed by its
     click, or a bare click), then a purchase. Not a segment chain at
-    all (the repeated unit is itself a sequence), so neither the
-    island walk nor the flat lead compiler applies; round 10b parses
-    the full grammar into an AST and enumerates its concrete branch
+    all (the repeated unit is itself a sequence), so the island walk
+    cannot take it; _enum_ast enumerates the AST's concrete branch
     shapes in exact regex-backtracking DFS order (the engine tries
     [view·click] with one copy and STOP before two copies starting
     [click, …] — count-descending order would misorder mixed-length
-    branches), compiling to the same lead-chain plan: per-offset set
+    branches) for the lead-chain plan: per-offset set
     membership over lead() columns on the one per-user sort, one
     coalesce, no Python stage, no join (pinned in
     test_matchpath_compile.py). Reference surface:
@@ -1716,8 +1450,8 @@ def seq_matchpath_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registered query: min-0 FIRST atom over an UNBOUNDED chain — the
-# round-10b widened island-walk class, still zero Python
+# registered query: min-0 FIRST atom over an UNBOUNDED chain on the
+# island walk, zero Python
 # ---------------------------------------------------------------------------
 
 _OPTLEAD_ORACLE = """
@@ -1758,15 +1492,12 @@ def seq_matchpath_optional_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``view*.click+.purchase`` — a purchase preceded by one-or-more
     consecutive clicks, optionally led by a view run; a match begins
     at EVERY row of the qualifying run (the anchor may sit on a view
-    or directly on a click). Before round 10b a min-0 first atom was a
-    documented automaton boundary ("the start anchor shifts per
-    variant"); the island walk now takes it by widening candidates to
-    the UNION of variant first groups and gating each variant on the
-    candidate row's own group id — char-sets are disjoint, so exactly
-    one variant family applies per row and the coalesce preference
-    order is intact. Unbounded quantifiers keep this pattern out of
-    the lead-chain plan, so this is specifically the widened
-    island-walk class: pure window expressions plus one equi-join, no
+    or directly on a click). The island walk takes it by widening
+    candidates to the UNION of variant first groups and gating each
+    variant on the candidate row's own group id — char-sets are
+    disjoint, so exactly one variant family applies per row and the
+    coalesce preference order is intact. Unbounded quantifiers keep
+    this pattern off the lead chain: pure window expressions, no
     Python stage (pinned in test_matchpath_compile.py). Reference
     surface: hive-exec-2.3.10-core.jar!ql/udf/ptf/MatchPath.class. The
     DuckDB oracle anchors the identical greedy regex at every row, so
@@ -1809,9 +1540,8 @@ def _npath_split(body: str) -> dict[str, str]:
     keyword. Keywords are recognized case-insensitively at paren depth
     0 outside single-quoted strings, so symbol expressions may contain
     parens, commas, and quoted literals freely. Literal boundaries
-    (incl. backslash escapes and ``''`` doubling — round-12 ADVICE)
-    come from the ONE shared scanner, materialized_views'
-    :func:`_literal_mask`."""
+    (incl. backslash escapes and ``''`` doubling) come from the ONE
+    shared scanner, materialized_views' :func:`_literal_mask`."""
     from hive_service_spark.operators.materialized_views import (
         _literal_mask,
     )
@@ -1860,10 +1590,9 @@ def _npath_split(body: str) -> dict[str, str]:
 def _collapse_ws(s: str) -> str:
     """Collapse whitespace runs to single spaces OUTSIDE single-quoted
     literals — a quoted string's exact bytes are part of the predicate
-    (review finding: a blanket ``re.sub(r"\\s+", " ")`` silently
-    rewrote tabs/newlines inside SYMBOLS literals). Literal boundaries
-    (incl. backslash escapes — round-12 ADVICE) come from the shared
-    :func:`_literal_mask` scanner."""
+    (a blanket ``re.sub(r"\\s+", " ")`` would rewrite tabs/newlines
+    inside SYMBOLS literals). Literal boundaries (incl. backslash
+    escapes) come from the shared :func:`_literal_mask` scanner."""
     from hive_service_spark.operators.materialized_views import (
         _literal_mask,
     )
@@ -1901,40 +1630,38 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
               PATTERN('<pattern>')
               [MEASURES(<agg-sql-expr> AS <name> [, ...])])
 
-    ``PARTITION BY c1, c2, ...`` (round 12, verdict #3) matches the
-    reference PTF, which partitions on arbitrary column lists
-    (hive-exec-2.3.10-core.jar!ql/parse/PTFInvocationSpec). Round 13
-    (r12 verdict #5): an item may be an arbitrary EXPRESSION with a
-    mandatory ``AS <name>`` (``CAST(ts AS DATE) AS day``) — the
-    reference's PartitionExpression — pre-projected onto the relation
-    before the identical key machinery runs; the alias is the output
-    column name. A
-    composite key is packed into ONE collision-free derived key
-    (``to_json`` of the column struct, nulls kept — distinct tuples
-    stay distinct), matchpath runs on the packed key — same plans,
-    same single key-shuffle — and the ORIGINAL columns ride back onto
-    each match via matchpath's passthrough (they are constant within a
-    partition, so the start-row value is exact). The packed key never
-    appears in the output.
+    ``PARTITION BY c1, c2, ...`` matches the reference PTF, which
+    partitions on arbitrary column lists (hive-exec-2.3.10-core.jar!
+    ql/parse/PTFInvocationSpec). An item may be an arbitrary
+    EXPRESSION with a mandatory ``AS <name>`` (``CAST(ts AS DATE) AS
+    day``) — the reference's PartitionExpression — pre-projected onto
+    the relation before the identical key machinery runs; the alias is
+    the output column name. A composite key is packed into ONE derived
+    key (a struct of the columns for the compiled plans, its
+    ``to_json`` string for the automaton; nulls kept, so distinct
+    tuples stay distinct), matchpath runs on the packed key — same
+    plans, same single key-shuffle — and the ORIGINAL columns ride back
+    onto each match via matchpath's passthrough (they are constant
+    within a partition, so the start-row value is exact). The packed
+    key never appears in the output.
 
     ``path_start``/``path_end`` timestamps come from the FIRST ORDER BY
     column (the reference emits the matched rows' sort key the same
     way). ``ORDER BY`` items accept ``ASC``/``DESC`` and ``NULLS
-    FIRST``/``NULLS LAST`` suffixes (round 12 — the reference PTF's
-    OrderSpec carries a per-column direction AND null ordering); a
-    descending walk expresses latest-first patterns, and with
-    ``MAXROWS`` the budget keeps each key's LATEST n rows (the prefix
-    of the descending sort). ``MAXROWS n`` (round 11, verdict #1) is
-    the per-partition
-    event budget made first-class in the SQL surface: the input is
-    pre-passed through capped_user_prefix(n) — each key's EARLIEST n
-    rows on the same sort — and every match carries the stamped
+    FIRST``/``NULLS LAST`` suffixes (the reference PTF's OrderSpec
+    carries a per-column direction AND null ordering); a descending
+    walk expresses latest-first patterns, and with ``MAXROWS`` the
+    budget keeps each key's LATEST n rows (the prefix of the
+    descending sort). ``MAXROWS n`` is the per-partition event budget
+    made first-class in the SQL surface: the input is pre-passed
+    through capped_user_prefix(n) — each key's EARLIEST n rows on the
+    same sort — and every match carries the stamped
     ``user_capped`` flag via matchpath's passthrough. This is the
     bound that keeps an automaton-class (irregular) pattern from
     buffering a hot key's unbounded history in one Python worker;
     compiled-class patterns never leave the JVM regardless.
 
-    ``MEASURES`` (round 11) is the reference PTF's result-expression
+    ``MEASURES`` is the reference PTF's result-expression
     list (MatchPath's arg4 emits selected expressions over the matched
     row set): each aggregate SQL expression is evaluated over the rows
     of each match and appended after the 5 metadata columns, in
@@ -1942,19 +1669,18 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     consume contiguous row numbers, so the matched set is ONE
     explode(sequence) + a (key, rn) equi-join back to the input rows +
     one groupBy per match — linear in matched rows. The equi-join is
-    NULL-SAFE on the partition key (round-12 ADVICE: plain equality
-    silently dropped null-key partitions from MEASURES output, while
-    the matching plans deliberately keep them). MEASURES requires the
+    NULL-SAFE on the partition key, because the matching plans keep
+    null-key partitions and plain equality would drop their matches.
+    MEASURES requires the
     ORDER BY list to be a UNIQUE sort key within each partition: it
     re-numbers the input rows with an independent row_number on the
     same (key, order) sort, and a tie could be broken differently from
     the matching plan's internal numbering, attributing aggregates to
-    the wrong rows. Round 13 (r12 ADVICE): the requirement is now
-    ENFORCED — a lag over the numbering's own window poisons the row
-    number with raise_error on the first duplicate sort tuple, so a
-    tie fails loudly at run time instead of mis-attributing (append a
-    tiebreaker column such as an event id, as every registered query
-    here does).
+    the wrong rows. The requirement is ENFORCED: a lag over the
+    numbering's own window poisons the row number with raise_error on
+    the first duplicate sort tuple, so a tie fails loudly at run time
+    instead of mis-attributing (append a tiebreaker column such as an
+    event id, as every registered query here does).
 
     Whitespace runs outside quoted literals are normalized to single
     spaces; bytes INSIDE single-quoted literals are preserved
@@ -1962,7 +1688,7 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     # this surface's literal dialect is SINGLE-quoted (every internal
     # splitter/normalizer masks ' only); a double-quoted literal would
     # silently corrupt clause spans and have its interior whitespace
-    # collapsed — refuse loudly instead (round-13 review)
+    # collapsed — refuse loudly instead
     from hive_service_spark.operators.materialized_views import (
         _literal_mask as _lm,
     )
@@ -1986,8 +1712,7 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     if missing:
         raise ValueError(f"npath_sql: missing clause(s) {missing}")
 
-    # shared with the MV rewriter's SELECT-list parser (round-11
-    # review: two near-identical depth-tracking splitters)
+    # shared with the MV rewriter's SELECT-list parser
     from hive_service_spark.operators.materialized_views import (
         _split_top_level,
     )
@@ -1995,9 +1720,9 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     part_items = [c for c in _split_top_level(clauses["PARTITION BY"]) if c]
     if not part_items:
         raise ValueError("npath_sql: PARTITION BY needs at least one item")
-    # round 13 (r12 verdict #5): the reference PTF partitions on
-    # arbitrary EXPRESSIONS (hive-exec!ql/parse/PTFInvocationSpec,
-    # PartitionExpression), not only columns. A non-identifier item
+    # the reference PTF partitions on arbitrary EXPRESSIONS
+    # (hive-exec!ql/parse/PTFInvocationSpec, PartitionExpression),
+    # not only columns. A non-identifier item
     # must carry `AS <name>` — the name becomes the output column the
     # match rows report (the reference never emits the bare expression
     # either; the alias makes the surface explicit). Internally an
@@ -2030,7 +1755,6 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     # double-underscore names are this surface's internal namespace
     # (__np_pk packed key, __pt* passthrough aliases, __mp_* measures
     # frames) — a user column there would be silently clobbered
-    # (round-12 review)
     dunder = [c for c in part_cols if c.startswith("__")]
     if dunder:
         raise ValueError(
@@ -2088,7 +1812,7 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
                 )
             if am.group(2) in _META_NAMES or am.group(2) in part_cols:
                 # a measure aliased to an output column name would
-                # emit two columns with one name (round-12 review)
+                # emit two columns with one name
                 raise ValueError(
                     f"npath_sql: measure name {am.group(2)!r} collides "
                     "with an npath output column"
@@ -2103,9 +1827,9 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
         else spark.table(rel)
     )
     # the '__' internal namespace guard covers the RELATION's schema
-    # too (round-12 ADVICE: an ON-relation column named __np_pk was
-    # silently clobbered by the composite-key withColumn; __mp_rn_r /
-    # __mp_pk_r duplicated inside the MEASURES row frame)
+    # too: an ON-relation column named __np_pk would be clobbered by
+    # the composite-key withColumn, and __mp_rn_r / __mp_pk_r would be
+    # duplicated inside the MEASURES row frame
     reserved = [c for c in df.columns if re.match(r"__(np_|mp_|pt)", c)]
     if reserved:
         raise ValueError(
@@ -2128,16 +1852,16 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
         # key and carry the original columns onto each match via
         # passthrough — constant within a partition, so the start-row
         # value is exact. Cost: one derived column through the same
-        # single key-shuffle every plan already pays. r14: compiled
-        # classes (asked of the shared _route, the same decision
-        # matchpath itself makes) pack to a plain STRUCT — every JVM
-        # plan partitions/compares structs natively, and the struct's
+        # single key-shuffle every plan already pays. Compiled classes
+        # (asked of the shared _route, the same decision matchpath
+        # itself makes) pack to a plain STRUCT — every JVM plan
+        # partitions/compares structs natively, and the struct's
         # binary row layout shuffles ~half the bytes of the to_json
         # string (interleaved A/B on the key shuffle+sort stage:
         # 0.288 -> 0.205 s median at sf0.1). Only the Arrow automaton,
-        # whose pandas groupby needs a hashable key, still pays the
-        # JSON serialization (to_json keeps distinct tuples distinct,
-        # nulls included).
+        # whose pandas groupby needs a hashable key, pays the JSON
+        # serialization (to_json keeps distinct tuples distinct, nulls
+        # included).
         part = "__np_pk"
         packed = F.struct(*part_cols)
         if _route(pattern, compile_pattern(pattern, symbols)[0])[0] == (
@@ -2146,11 +1870,9 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
             packed = F.to_json(packed, {"ignoreNullFields": "false"})
         df = df.withColumn(part, packed)
         passthrough = tuple(part_cols)
-    # direction-aware sort keys (round 12: ORDER BY items accept
-    # ASC/DESC and NULLS FIRST/LAST suffixes like the reference PTF's
-    # OrderSpec) — shared by the budget pre-pass and the MEASURES
-    # re-numbering so every stage sorts identically to the matching
-    # plan
+    # direction-aware sort keys, shared by the budget pre-pass and
+    # the MEASURES re-numbering so every stage sorts identically to
+    # the matching plan
     order_keys = [
         _order_key(_sort_col(e, c), d, nl)
         for c, (e, d, nl) in zip(
@@ -2198,16 +1920,15 @@ def npath_sql(spark: SparkSession, call: str) -> DataFrame:
     # equi-join back to the input rows (numbered on the same
     # (key, order) sort) + one groupBy per match; linear in matched
     # rows, reusing the same shuffle family. The key equality is
-    # NULL-SAFE (round-12 ADVICE): the matching plans keep null-key
-    # partitions, so MEASURES must not silently drop their matches.
+    # NULL-SAFE: the matching plans keep null-key partitions, so
+    # MEASURES must not silently drop their matches.
     from pyspark.sql import Window
 
     w = Window.partitionBy(part).orderBy(*order_keys)
-    # the documented MEASURES contract — the ORDER BY list must be a
-    # UNIQUE sort key per partition — is now ENFORCED, not just
-    # documented (round-12 ADVICE: a tie lets this independent
+    # the MEASURES contract — the ORDER BY list must be a UNIQUE sort
+    # key per partition — is ENFORCED: a tie lets this independent
     # row_number break differently from the matching plan's internal
-    # numbering, silently attributing aggregates to wrong rows). The
+    # numbering, silently attributing aggregates to wrong rows. The
     # check rides the SAME window as the numbering (lag of the sort
     # tuple; zero extra exchange) and poisons the row number with
     # raise_error on the first duplicate tuple, so it runs wherever
@@ -2280,9 +2001,8 @@ def seq_npath_sql_compiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     PATTERN(...))``. It has the same ``view.view*.purchase`` contract
     as seq_matchpath_general and shares its oracle, so one value hash
     proves the SQL surface, the DataFrame operator and the DuckDB regex
-    model agree. npath_sql's call parser hands the pattern to
-    _matchpath_jvm_chain's island walk, so the plan never leaves the
-    JVM (plan pinned in test_matchpath_compile.py)."""
+    model agree. The pattern routes to the island walk, so the plan
+    never leaves the JVM (plan pinned in test_matchpath_compile.py)."""
     load(spark, sf_dir, "events").createOrReplaceTempView(
         "npath_events_src"
     )
@@ -2349,8 +2069,8 @@ ORDER BY m.user_id, start_rn
 
 @query("seq_npath_sql_capped", oracle=_NPATH_CAPPED_ORACLE)
 def seq_npath_sql_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The automaton-class SQL npath under the per-user budget (round
-    11, verdict #1's second half): ``signup.(view|signup)+.click`` has
+    """The automaton-class SQL npath under the per-user budget:
+    ``signup.(view|signup)+.click`` has
     an unbounded quantifier over an OVERLAPPING char-set ({signup} vs
     {view, signup}) — no island key, no finite lead depth — so it is
     genuinely the Arrow automaton's class, the exact shape whose
@@ -2388,8 +2108,8 @@ def seq_npath_sql_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("seq_npath_sql_measures", oracle=_MEASURES_ORACLE)
 def seq_npath_sql_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MEASURES through the SQL npath surface (round 11): the
-    reference PTF's arg4 is a RESULT-EXPRESSION list — selected
+    """MEASURES through the SQL npath surface: the reference PTF's
+    arg4 is a RESULT-EXPRESSION list — selected
     expressions emitted over each match's rows (hive-exec-2.3.10-core
     .jar!ql/udf/ptf/MatchPath.class, e.g. tpath.size / sum over the
     path) — so the SQL call shape needs it too, not just the
@@ -2397,7 +2117,7 @@ def seq_npath_sql_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     same two cent aggregates, SHARING seq_matchpath_measures' oracle:
     one value hash proves the SQL MEASURES clause, the DataFrame
     composition, and the DuckDB regex+join model all agree. Matches
-    still come from the compiled island walk (Python-free); the
+    come from the compiled island walk (Python-free); the
     measures join is the same explode(sequence) + (key, rn) equi-join
     plan, built once inside npath_sql."""
     load(spark, sf_dir, "events").createOrReplaceTempView(
@@ -2423,9 +2143,9 @@ def seq_npath_sql_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round 12: composite PARTITION BY through the SQL npath surface
-# (verdict #3 — the reference PTF partitions on arbitrary column
-# lists), and the MAXROWS x MEASURES matrix cell (verdict #6)
+# composite PARTITION BY through the SQL npath surface (the reference
+# PTF partitions on arbitrary column lists), and MAXROWS x MEASURES in
+# one call
 # ---------------------------------------------------------------------------
 
 _MULTIKEY_ORACLE = """
@@ -2465,21 +2185,18 @@ ORDER BY m.user_id, day, start_rn
 @query("seq_npath_sql_multikey", oracle=_MULTIKEY_ORACLE)
 def seq_npath_sql_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite ``PARTITION BY user_id, day`` through the SQL npath
-    surface (round 12, verdict #3): the reference PTF partitions on
-    arbitrary column lists (hive-exec-2.3.10-core.jar!ql/parse/
-    PTFInvocationSpec — PartitionSpec holds a list of
-    PartitionExpression), and until this round our SQL surface
-    accepted exactly one identifier — the one visible delta from the
-    reference call shape. Semantics: the session-per-day clickstream
-    cut — ``view.view*.purchase`` matched WITHIN each (user, calendar
-    day), so a path spanning midnight is two partitions, not one
-    match. Spark-first shape: the composite key packs into one
-    collision-free derived string (to_json of the struct, nulls kept),
-    the pattern still compiles to the Python-free island walk on that
-    key — one key-shuffle exactly as the single-key plan — and the
-    original columns ride back via matchpath's passthrough (constant
-    per partition). At 100 TB the finer key only HELPS skew: the hot
-    user's history splits across days."""
+    surface: the reference PTF partitions on arbitrary column lists
+    (hive-exec-2.3.10-core.jar!ql/parse/PTFInvocationSpec —
+    PartitionSpec holds a list of PartitionExpression). Semantics: the
+    session-per-day clickstream cut — ``view.view*.purchase`` matched
+    WITHIN each (user, calendar day), so a path spanning midnight is
+    two partitions, not one match. Spark-first shape: the pattern
+    routes to the island walk, so the composite key packs into one
+    struct of the two columns (nulls kept), the plan stays Python-free
+    on that key — one key-shuffle exactly as the single-key plan — and
+    the original columns ride back via matchpath's passthrough
+    (constant per partition). At 100 TB the finer key only HELPS skew:
+    the hot user's history splits across days."""
     load(spark, sf_dir, "events").createOrReplaceTempView(
         "npath_events_src"
     )
@@ -2504,14 +2221,14 @@ def seq_npath_sql_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
 def seq_npath_sql_expr_partition(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """PARTITION BY on an EXPRESSION, directly in the call (round 13,
-    r12 verdict #5): ``PARTITION BY user_id, CAST(CAST(ts AS DATE) AS
-    TIMESTAMP) AS day`` — the reference PTF's PartitionExpression
+    """PARTITION BY on an EXPRESSION, directly in the call:
+    ``PARTITION BY user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS
+    day`` — the reference PTF's PartitionExpression
     (hive-exec-2.3.10-core.jar!ql/parse/PTFInvocationSpec) without the
-    pre-projected subquery workaround seq_npath_sql_multikey
-    demonstrates. The expression is pre-projected internally, then the
-    identical composite-key plan runs (packed to_json key, one
-    key-shuffle, originals back via passthrough) — proven by SHARING
+    pre-projected subquery seq_npath_sql_multikey uses. The expression
+    is pre-projected internally, then the identical composite-key plan
+    runs (packed struct key, one key-shuffle, originals back via
+    passthrough) — proven by SHARING
     seq_npath_sql_multikey's oracle: one value hash pins that the
     inline-expression surface and the subquery form produce
     byte-identical results."""
@@ -2587,9 +2304,8 @@ ORDER BY m.user_id, start_rn
 def seq_npath_sql_capped_measures(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """MAXROWS x MEASURES together (round 12, verdict #6): the SQL
-    surface supported both clauses but no registered query exercised
-    them in ONE call — the cell that matters is whether the MEASURES
+    """MAXROWS x MEASURES together in ONE call — the cell that
+    matters is whether the MEASURES
     join-back sees the CAPPED row numbering (it must: npath_sql
     re-numbers the same capped frame matchpath consumed, so a match's
     [start_rn, start_rn + match_len) range indexes into the budgeted
@@ -2656,17 +2372,16 @@ ORDER BY m.user_id, start_rn
 
 @query("seq_npath_sql_desc", oracle=_DESC_ORACLE)
 def seq_npath_sql_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DESC order through the npath surface (round 12): the reference
-    PTF's OrderSpec carries a per-column sort direction (hive-exec
-    -2.3.10-core.jar!ql/parse/PTFInvocationSpec), which until this
-    round our ORDER BY clause could not express. The latest-first
+    """DESC order through the npath surface: the reference PTF's
+    OrderSpec carries a per-column sort direction (hive-exec
+    -2.3.10-core.jar!ql/parse/PTFInvocationSpec). The latest-first
     walk: ``purchase.view+`` over ``ORDER BY ts DESC, event_id DESC``
     finds each purchase followed (going backward in time) by the run
     of views that led to it — the attribution-style read of the same
     clickstream. start_rn numbers rows in the DESCENDING order
     (start_rn 1 = the user's latest event), path_start is the
-    purchase's timestamp, path_end the earliest view's. Still the
-    compiled island walk (two disjoint atoms, final ``+``): the only
+    purchase's timestamp, path_end the earliest view's. It runs on
+    the island walk (two disjoint atoms, final ``+``): the only
     change at any scale is the sort direction inside the one
     key-shuffle — Python-free, plan identical in shape to the ASC
     twin. Value-oracled against the DuckDB regex model over the

@@ -2,13 +2,12 @@
 wrong-answer bug: with >=25 symbols the old 'x'-skip assigned the same
 char to two symbols, silently cross-matching their pattern elements.
 
-Plus the round-8 chain compiler: any literal dot-chain with per-symbol
-* + ? quantifiers compiles to a pure JVM island-walk plan. Every
-routed pattern is differentially tested against the anchored-regex
-reference model (the Python automaton's exact semantics), including
-the backtracking shapes (a.b*.b) the round-7 3-symbol rewrite had to
-exclude — segment merging turns the regex's give-back into island
-arithmetic.
+Plus the three MatchPath plans (lead chain, island walk, automaton)
+and the one routing rule between them (``_route``). Every routed
+pattern is differentially tested against the anchored-regex reference
+model (the Python automaton's exact semantics), including the
+backtracking shapes (a.b*.b) — segment merging turns the regex's
+give-back into island arithmetic.
 """
 
 from __future__ import annotations
@@ -18,9 +17,11 @@ import pytest
 from hive_service_spark.operators.matchpath import (
     _INF,
     _chain_variants,
-    _parse_chain,
+    _route,
     compile_pattern,
 )
+
+_ABC = {"a": "a", "b": "b", "c": "c"}
 
 
 def test_symbol_chars_unique_at_26_symbols():
@@ -168,9 +169,7 @@ def test_jvm_chain_fuzz_random_sequences(spark):
         pat = ".".join(
             t + {"1": ""}.get(q, q) for t, q in zip(toks, quants)
         )
-        if _parse_chain(pat) and _chain_variants(
-            [(t, q) for t, q in zip(toks, quants)]
-        ):
+        if _route(pat, _ABC)[0] == "chain":
             pats.append((pat, "".join(
                 t + {"1": ""}.get(q, q) for t, q in zip(toks, quants)
             )))
@@ -215,8 +214,11 @@ def test_jvm_alternation_and_bounded_match_regex(spark):
         ("a.(b|c){2,}.a", "a(b|c){2,}a"),
         ("a.a{1,2}.b", "aa{1,2}b"),  # bounded merge into start (2,3)
         ("a.b{1,2}.b{2,3}.c", "ab{1,2}b{2,3}c"),  # bounded+bounded
-        # round 9 continued: bounded FINAL segments (end timestamp via
-        # the rn-identity equi-join, not the island frame)
+        # unbounded chains with bounded middles: the island walk
+        ("a.b{2,3}.c+", "ab{2,3}c+"),
+        ("a*.b{1,2}.c", "a*b{1,2}c"),
+        # bounded FINAL segments: the lead chain when finite, the
+        # automaton when another atom is unbounded
         ("a.b{2}", "ab{2}"),
         ("a.b{2,3}", "ab{2,3}"),
         ("a{2,3}", "a{2,3}"),  # single bounded segment
@@ -269,21 +271,20 @@ def test_widened_chain_class_compiles_without_python(spark):
         "a.b{2,4}.c",  # bounded quantifier
         "a+.b",  # quantified first atom
         "a.(b|c){2,}.a",  # bounded group
-        "a.b{2,3}",  # bounded FINAL segment (rn-identity end join)
+        "a.b{2,3}",  # bounded FINAL segment (finite: lead chain)
         "a{2,3}",  # single bounded segment
         "a.b?.b{1,2}",  # merge into a bounded final
-        # round 10: OVERLAPPING sets with finite bounds take the
-        # lead-chain plan — also pure JVM
+        # OVERLAPPING sets with finite bounds: the lead chain
         "a.(a|b).c",
         "(a|b){1,2}.(b|c){1,2}",
         "a.(a|b)?.b{1,2}",
-        # round 10b: min-0 FIRST atoms ride the island walk (variants
-        # gated on the row's own group id), even unbounded
+        # min-0 FIRST atoms ride the island walk (variants gated on
+        # the row's own group id), even unbounded
         "a*.b",
         "a{0,3}.b+",
         "(a|b)*.c",
-        # round 10b: nested groups / sequence alternation / top-level
-        # alternation with finite bounds take the AST lead-chain plan
+        # nested groups / sequence alternation / top-level
+        # alternation with finite bounds: the lead chain
         "a.(b.c|c){1,2}",
         "(a.b|c).a",
         "a.b|b.c",
@@ -293,14 +294,19 @@ def test_widened_chain_class_compiles_without_python(spark):
         for marker in py_markers:
             assert marker not in plan, f"{pattern} fell back:\n{plan[:400]}"
 
-    # what remains on the automaton (round 10b): an UNBOUNDED
-    # quantifier outside the disjoint flat-chain class — over an
-    # overlapping set (no finite lead depth, no island key) or over a
-    # nested group (the repeated unit spans islands). Round 11: the
-    # automaton is batch-sliced mapInPandas (was per-group
-    # applyInPandas, whose per-key UDF invocation was O(n_keys)
-    # overhead), so its plan marker is MapInPandas.
-    for pattern in ("a.(b|c)*.c", "(a|b)+.b", "(a.b)+.c", "(a.b|c)*.a"):
+    # what remains on the automaton: an UNBOUNDED quantifier outside
+    # the disjoint flat-chain class — over an overlapping set (no
+    # finite lead depth, no island key) or over a nested group (the
+    # repeated unit spans islands) — and an unbounded chain whose
+    # final segment is bounded. The automaton is batch-sliced
+    # mapInPandas, so its plan marker is MapInPandas.
+    for pattern in (
+        "a.(b|c)*.c",
+        "(a|b)+.b",
+        "(a.b)+.c",
+        "(a.b|c)*.a",
+        "a.b*.c{2,3}",
+    ):
         plan = plan_of(pattern)
         assert "MapInPandas" in plan, (
             f"{pattern} must route to the automaton"
@@ -342,48 +348,12 @@ def test_jvm_overlap_leadchain_matches_regex(spark):
         assert got == want, f"pattern {pattern} diverges from {rx}"
 
 
-def test_lead_compositions_order_and_gates():
-    """The composition expansion must enumerate count vectors in
-    regex-backtracking (lexicographic-descending) order, dedupe equal
-    offset signatures, and refuse unbounded or over-budget chains."""
-    from hive_service_spark.operators.matchpath import (
-        _LEAD_MAX_COMPS,
-        _LEAD_MAX_K,
-        _lead_compositions,
-    )
-
-    ab, bc = frozenset("ab"), frozenset("bc")
-    comps, k = _lead_compositions([(ab, "{1,2}"), (bc, "{1,2}")])
-    assert k == 4
-    assert [
-        "".join("1" if cs == ab else "2" for cs in comp) for comp in comps
-    ] == ["1122", "112", "122", "12"]
-
-    # same-set adjacency dedupes to distinct lengths only
-    comps, _ = _lead_compositions([(ab, "{1,2}"), (ab, "{1,2}")])
-    assert [len(c) for c in comps] == [4, 3, 2]
-
-    # unbounded / over-budget -> None (stays on the automaton)
-    assert _lead_compositions([(ab, "+"), (bc, "1")]) is None
-    assert _lead_compositions([(ab, "{1,}"), (bc, "1")]) is None
-    assert _lead_compositions([(ab, f"{{1,{_LEAD_MAX_K + 1}}}")]) is None
-    assert (
-        _lead_compositions(
-            [(ab, "{0,7}"), (bc, "{0,7}"), (frozenset("ac"), "{0,7}")]
-        )
-        is None
-    )  # 8^3 = 512 comps but K = 21 > 16
-    assert _lead_compositions([(ab, "{1,1}")]) is not None
-
-
 def test_jvm_overlap_fuzz_random_sequences(spark):
-    """Deterministic fuzz over the round-10 overlap class: random
+    """Deterministic fuzz over the lead chain's overlap class: random
     chains whose atoms draw from ARBITRARY (non-disjoint) subsets of
     {a, b, c} with bounded quantifiers only, verified against the
     anchored-regex model on run-skewed length-12 sequences."""
     import random
-
-    from hive_service_spark.operators.matchpath import _lead_compositions
 
     rnd = random.Random(10)
     cells = [("a",), ("b",), ("c",), ("a", "b"), ("b", "c"), ("a", "c"),
@@ -401,20 +371,12 @@ def test_jvm_overlap_fuzz_random_sequences(spark):
             atom = t[0] if len(t) == 1 else "(" + "|".join(t) + ")"
             parts.append(atom + q)
         pattern = ".".join(parts)
-        chain = _parse_chain(pattern)
-        if chain is None:
-            continue
-        atoms = [
-            frozenset((a,) if isinstance(a, str) else a) for a, _ in chain
-        ]
         # only keep genuinely OVERLAPPING draws (the disjoint ones are
-        # the island walk's class, already fuzzed above)
-        distinct = set(atoms)
+        # fuzzed above) that route to the lead chain
+        distinct = {frozenset(t) for t in toks}
         if all(x == y or not (x & y) for x in distinct for y in distinct):
             continue
-        if _lead_compositions(
-            list(zip(atoms, (q for _, q in chain)))
-        ) is None:
+        if _route(pattern, _ABC)[0] != "lead":
             continue
         rx = "".join(
             (t[0] if len(t) == 1 else "(" + "|".join(t) + ")") + q
@@ -433,10 +395,11 @@ def test_jvm_overlap_fuzz_random_sequences(spark):
 
 
 def test_jvm_widened_fuzz_random_sequences(spark):
-    """Deterministic fuzz over the WIDENED class: random chains whose
-    atoms draw from a random disjoint partition of {a, b, c} and whose
-    quantifiers include the bounded forms, verified against the
-    anchored-regex model on run-skewed length-12 sequences."""
+    """Deterministic fuzz over the island walk: random chains whose
+    atoms draw from a random disjoint partition of {a, b, c}, whose
+    quantifiers include the bounded forms, and which route to the
+    island walk, verified against the anchored-regex model on
+    run-skewed length-12 sequences."""
     import random
 
     rnd = random.Random(9)
@@ -460,13 +423,7 @@ def test_jvm_widened_fuzz_random_sequences(spark):
             atom = t[0] if len(t) == 1 else "(" + "|".join(t) + ")"
             parts.append(atom + q)
         pattern = ".".join(parts)
-        chain = _parse_chain(pattern)
-        if chain is None:
-            continue
-        atoms = [
-            frozenset((a,) if isinstance(a, str) else a) for a, _ in chain
-        ]
-        if _chain_variants(list(zip(atoms, (q for _, q in chain)))) is None:
+        if _route(pattern, _ABC)[0] != "chain":
             continue
         rx = "".join(
             (t[0] if len(t) == 1 else "(" + "|".join(t) + ")") + q
@@ -484,71 +441,141 @@ def test_jvm_widened_fuzz_random_sequences(spark):
         assert got == want, f"fuzz {pi}: pattern {pattern} diverges"
 
 
-def test_chain_detection_and_fallback_scope():
-    """Min-0 first atoms, nested/degenerate groups, too many optional
-    atoms, and finite-max>1 final segments fall back to the Python
-    automaton; flat alternation groups and bounded quantifiers parse
-    (round-9 widening)."""
-    assert _parse_chain("view.view*.purchase") == [
-        ("view", "1"), ("view", "*"), ("purchase", "1"),
-    ]
-    assert _parse_chain("a.b*.c") == [("a", "1"), ("b", "*"), ("c", "1")]
-    # round 9: flat literal alternation groups are chain atoms now
-    assert _parse_chain("a.(b|c)*.d") == [
-        ("a", "1"), (("b", "c"), "*"), ("d", "1"),
-    ]
-    assert _parse_chain("(c|b).a") == [(("b", "c"), "1"), ("a", "1")]
-    # round 9: bounded quantifiers are chain tokens
-    assert _parse_chain("a.b{2,4}.c") == [
-        ("a", "1"), ("b", "{2,4}"), ("c", "1"),
-    ]
-    assert _parse_chain("a{2}.b") == [("a", "{2}"), ("b", "1")]
-    assert _parse_chain("a{2,}.b") == [("a", "{2,}"), ("b", "1")]
-    # round 9: min>=1 quantified FIRST atoms are allowed ('a+' anchors
-    # every start row exactly like 'a.a*')...
-    assert _parse_chain("a+.b") == [("a", "+"), ("b", "1")]
-    # ...and round 10b admits min-0 FIRST atoms too: the island walk
-    # gates each variant on the candidate row's own group id
-    assert _parse_chain("a*.b") == [("a", "*"), ("b", "1")]
-    assert _parse_chain("a{0,3}.b") == [("a", "{0,3}"), ("b", "1")]
-    # malformed / non-chain shapes -> automaton
-    assert _parse_chain("a.(b|c*).d") is None  # quantifier inside group
-    assert _parse_chain("a.(b).d") is None  # degenerate 1-member group
-    assert _parse_chain("a.b{3,2}") is None  # inverted bounds
-    # trailing quantifiers parse (round-8 relaxation): the engine gate
-    # lives in _chain_variants, not the parser
-    assert _parse_chain("a.b+") == [("a", "1"), ("b", "+")]
-    assert _parse_chain("a." + ".".join("b?" for _ in range(7)) + ".c") is None
+# every registered matchpath()/npath_sql entry: (pattern, plan class)
+_REGISTERED_ROUTES = {
+    "seq_matchpath_general": ("view.view*.purchase", "chain"),
+    "seq_matchpath_measures": ("view.view*.purchase", "chain"),
+    "seq_matchpath_capped": ("view.view*.purchase", "chain"),
+    "seq_npath_sql_compiled": ("view.view*.purchase", "chain"),
+    "seq_npath_sql_measures": ("view.view*.purchase", "chain"),
+    "seq_npath_sql_multikey": ("view.view*.purchase", "chain"),
+    "seq_npath_sql_expr_partition": ("view.view*.purchase", "chain"),
+    "script_npath_session": ("view.view*.purchase", "chain"),
+    "seq_matchpath_chain4": ("signup.view*.click+.purchase", "chain"),
+    "seq_matchpath_optional_lead": ("view*.click+.purchase", "chain"),
+    "seq_npath_sql_desc": ("purchase.view+", "chain"),
+    "seq_matchpath_alternation": (
+        "signup.(view|click){1,3}.purchase", "lead",
+    ),
+    "seq_matchpath_overlap": (
+        "signup.(view|click){1,2}.(click|purchase){1,2}", "lead",
+    ),
+    "seq_matchpath_nested": (
+        "signup.(view.click|click){1,2}.purchase", "lead",
+    ),
+    "seq_npath_sql_capped": ("signup.(view|signup)+.click", "automaton"),
+    "seq_npath_sql_capped_measures": (
+        "signup.(view|signup)+.click", "automaton",
+    ),
+}
 
-    # give-back shapes now expand to clean variants
-    v = _chain_variants([("a", "1"), ("b", "*"), ("b", "1")])
-    assert v == [
-        [("a", 1, 1), ("b", 2, _INF)],
-        [("a", 1, 1), ("b", 1, 1)],
-    ]
-    # round 9 lifted the bounded-final gate: finite max > 1 final
-    # segments expand too (the walk fetches their end timestamp via
-    # the rn-identity join instead of the island frame)
-    assert _chain_variants([("a", "1"), ("b", "?"), ("b", "1")]) == [
-        [("a", 1, 1), ("b", 2, 2)],
-        [("a", 1, 1), ("b", 1, 1)],
-    ]
-    assert _chain_variants([("a", "1"), ("a", "?")]) == [
-        [("a", 2, 2)],
-        [("a", 1, 1)],
-    ]
+
+def test_route_table():
+    """The one routing rule (stated on matchpath()): a finite pattern
+    within the lead caps takes the lead chain; otherwise a flat chain
+    of disjoint charset atoms with at most 6 min-0 atoms, whose every
+    variant ends in a segment of max 1 or unbounded, takes the island
+    walk; everything else the automaton. Pins the class of every
+    registered matchpath/npath pattern too."""
+    import inspect
+
+    from hive_service_spark.operators.matchpath import _LEAD_MAX_K
+    from hive_service_spark.registry import load_all
+
+    chars = {"a": "a", "b": "b", "c": "c", "d": "d"}
+
+    def route(pattern):
+        return _route(pattern, chars)
+
+    for pattern, want in (
+        # unbounded flat chains: the island walk
+        ("a.b*.c", "chain"),
+        ("a.(b|c)*.d", "chain"),  # a flat alternation group is one atom
+        ("a{2,}.b", "chain"),
+        ("a+.b", "chain"),  # min>=1 quantified first atom
+        ("a*.b", "chain"),  # min-0 first atom: variants gated per group
+        ("a.b+", "chain"),  # trailing quantifier
+        ("(b|c)+.a", "chain"),
+        ("a?." * 6 + "b+", "chain"),  # 6 min-0 atoms: the gate's edge
+        # finite patterns: the lead chain, whatever their shape
+        ("(c|b).a", "lead"),
+        ("a.b{2,4}.c", "lead"),
+        ("a{2}.b", "lead"),
+        ("a{0,3}.b", "lead"),
+        ("a.(b).d", "lead"),  # a one-member group is its symbol
+        ("a.b?.b", "lead"),
+        ("a.b{2,3}", "lead"),  # bounded final
+        ("b|a", "lead"),  # top-level alternation of symbols
+        ("(a|b){1,1}", "lead"),
+        ("a." + ".".join("b?" for _ in range(7)) + ".c", "lead"),
+        # everything else: the automaton
+        ("a.(b|c*).d", "automaton"),  # unbounded inside a group
+        ("a.b{3,2}", "automaton"),  # inverted bounds: malformed
+        ("(a|b)+.(b|c)", "automaton"),  # unbounded over overlapping sets
+        ("(a|b){1,}.(b|c)", "automaton"),
+        ("(a.b)+.c", "automaton"),  # unbounded nested group
+        ("a?." * 7 + "b+", "automaton"),  # 7 min-0 atoms
+        ("a.b*.c{2,3}", "automaton"),  # unbounded, bounded final
+        (f"(a|b){{1,{_LEAD_MAX_K + 1}}}", "automaton"),  # K over the cap
+        ("(a|b.c){1,5}", "automaton"),  # 62 branches, over the cap
+        # 8^3 = 512 branches and K = 21 > 16, over overlapping sets
+        ("(a|b){0,7}.(b|c){0,7}.(a|c){0,7}", "automaton"),
+    ):
+        assert route(pattern)[0] == want, pattern
+
+    # island variants: give-back shapes merge into clean segments, and
+    # group_of maps each member char onto its group's representative
+    assert route("a.b*.b") == ("chain", (
+        [[("a", 1, 1), ("b", 2, _INF)], [("a", 1, 1), ("b", 1, 1)]],
+        {"a": "a", "b": "b"},
+    ))
+    assert route("a.(c|b)+.d")[1][1] == {"a": "a", "b": "b", "c": "b", "d": "d"}
+
+    # lead branches in regex-backtracking (count-descending) order,
+    # equal offset signatures deduplicated, K = the longest branch
+    ab, bc = frozenset("ab"), frozenset("bc")
+    kind, (comps, k) = route("(a|b){1,2}.(b|c){1,2}")
+    assert kind == "lead" and k == 4
+    assert [
+        "".join("1" if cs == ab else "2" for cs in comp) for comp in comps
+    ] == ["1122", "112", "122", "12"]
+    _, (comps, _) = route("(a|b){1,2}.(a|b){1,2}")
+    assert [len(c) for c in comps] == [4, 3, 2]
+
+    specs = load_all()
+    registered = {
+        n for n in specs if "matchpath" in n or "npath" in n
+    } - {"seq_matchpath_funnel"}  # a fixed-LEAD window, not matchpath()
+    assert set(_REGISTERED_ROUTES) == registered
+    names = ["signup", "view", "click", "purchase"]
+    for name, (pattern, want) in _REGISTERED_ROUTES.items():
+        module = inspect.getmodule(inspect.unwrap(specs[name].fn))
+        assert pattern in inspect.getsource(module), name
+        assert _route(pattern, compile_pattern(pattern, names)[0])[0] == (
+            want
+        ), name
 
 
 def test_variant_preference_is_regex_backtracking_order():
-    v = _chain_variants(
-        [("a", "1"), ("b", "*"), ("c", "?"), ("d", "1")]
-    )
+    a, b, c, d = (frozenset(x) for x in "abcd")
+    v = _chain_variants([(a, 1, 1), (b, 0, _INF), (c, 0, 1), (d, 1, 1)])
     # all-present first, then the RIGHTMOST optional flips absent first
-    assert [tuple(ch for ch, _, _ in segs) for segs in v] == [
+    assert [tuple("".join(cs) for cs, _, _ in segs) for segs in v] == [
         ("a", "b", "c", "d"),
         ("a", "b", "d"),
         ("a", "c", "d"),
         ("a", "d"),
+    ]
+    # present optionals merge into their same-charset neighbors
+    # (finite patterns route to the lead chain, so these shapes reach
+    # _chain_variants only directly)
+    assert _chain_variants([(a, 1, 1), (b, 0, 1), (b, 1, 1)]) == [
+        [(a, 1, 1), (b, 2, 2)],
+        [(a, 1, 1), (b, 1, 1)],
+    ]
+    assert _chain_variants([(a, 1, 1), (a, 0, 1)]) == [
+        [(a, 2, 2)],
+        [(a, 1, 1)],
     ]
 
 
@@ -782,13 +809,15 @@ def test_enum_ast_mass_fuzz_pure_python(monkeypatch):
 
 def test_jvm_nested_fuzz_random_sequences(spark):
     """Deterministic fuzz over the round-10b AST class: random
-    patterns with nested groups / sequence alternation whose flat
-    parse FAILS (so they exercise the new route), verified against the
-    anchored-regex model on run-skewed length-12 sequences."""
+    patterns with nested groups / sequence alternation whose AST is
+    not a flat chain (so only the lead chain can take them), verified
+    against the anchored-regex model on run-skewed length-12
+    sequences."""
     import random
 
     from hive_service_spark.operators.matchpath import (
         _enum_ast,
+        _flat_atoms,
         _parse_ast,
     )
 
@@ -811,10 +840,10 @@ def test_jvm_nested_fuzz_random_sequences(spark):
     while len(pats) < 14 and tries < 6000:
         tries += 1
         pattern = ".".join(unit(1) for _ in range(rnd.randint(1, 3)))
-        if _parse_chain(pattern) is not None:
-            continue  # the flat classes, already fuzzed
         ast = _parse_ast(pattern)
-        if ast is None or _enum_ast(ast, chars) is None:
+        if ast is None or _flat_atoms(ast, chars) is not None:
+            continue  # the flat classes, already fuzzed
+        if _enum_ast(ast, chars) is None:
             continue
         rx = pattern.replace(".", "")
         pats.append((pattern, rx))
@@ -1286,7 +1315,7 @@ def test_npath_sql_composite_partition_matches(spark):
 def test_npath_sql_multikey_plan_is_python_free(spark):
     """The packed composite key must not knock the pattern off the
     compiled island walk — the registered multikey query's plan stays
-    JVM-only (to_json is a JVM expression)."""
+    JVM-only (the key is packed as a struct)."""
     from hive_service_spark.plans import inspect as P
     from hive_service_spark.registry import load_all
     from tests.conftest import SF_DIR
@@ -1298,12 +1327,11 @@ def test_npath_sql_multikey_plan_is_python_free(spark):
 
 
 def test_compiled_plans_keep_null_partition_keys(spark):
-    """Round 12: the island walk's internal equi-joins (candidate-to-
-    island, and the bounded-final end join) were the last places a
-    NULL partition key silently vanished — all three plan classes must
-    now agree with the regex model on a null-key group. Patterns
-    chosen to route one per plan: island walk without end join, island
-    walk WITH the bounded-final end join, lead chain, automaton."""
+    """A NULL partition key is a group like any other: every plan
+    class must agree with the regex model on a null-key group.
+    Patterns chosen to route one per plan (island walk, lead chain,
+    automaton), plus an unbounded chain with a bounded final segment,
+    which runs on the automaton."""
     import pyspark.sql.functions as F
 
     from hive_service_spark.operators.matchpath import matchpath
@@ -1323,8 +1351,8 @@ def test_compiled_plans_keep_null_partition_keys(spark):
         "sym",
     )
     for pattern, rx in (
-        ("a.a*.b", "aa*b"),  # island walk, end from island frame
-        ("a.a*.b{2,3}", "aa*b{2,3}"),  # island walk + bounded-final end join
+        ("a.a*.b", "aa*b"),  # island walk
+        ("a.a*.b{2,3}", "aa*b{2,3}"),  # automaton (bounded final)
         ("a.(a|b){1,2}", "a(a|b){1,2}"),  # lead chain
         ("(a|b)+.b", "(a|b)+b"),  # automaton
     ):

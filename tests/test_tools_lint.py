@@ -22,11 +22,22 @@ Rule 4: no module under ``hive_service_spark/`` imports a name at top
 level that it never uses. No pyflakes or ruff is installed, so the scan
 is ``ast``: an imported name counts as used when it appears as a name
 anywhere in the module.
+
+Rule 5: no comment or string in a module under ``hive_service_spark/``
+narrates the project's history: a round number (``round 11``,
+``round-12``, ``r13``), a verdict or an advice file. Docstrings and
+comments say what the code does now and why; history lives in git and
+CHANGES.md. The modules that still carry such narration are listed in
+``_NARRATION_ALLOWED``; the list only shrinks, since a listed module
+that no longer narrates fails the test until it is taken off.
 """
 
 from __future__ import annotations
 
 import ast
+import io
+import re
+import tokenize
 from pathlib import Path
 
 from hive_service_spark.registry import _QUERY_MODULES
@@ -233,3 +244,88 @@ def f(x: Any) -> str:
     return json.dumps(x)
 '''
     assert unused_imports(src) == ["4:os", "5:F", "6:Path"]
+
+
+_NARRATION = re.compile(
+    r"(?i:\brounds?[- ]\d+|\bverdicts?\b|\badvice\b)|\br\d{2}[a-z]?\b"
+)
+
+# package modules that still narrate history (rule 5); take a module
+# off when it is cleaned, never add one
+_NARRATION_ALLOWED = {
+    "functions/function_queries.py",
+    "functions/hive_compat.py",
+    "functions/percentile_hive.py",
+    "functions/sql_shims.py",
+    "llm/classify.py",
+    "llm/dedup.py",
+    "llm/multimodal.py",
+    "llm/pipeline.py",
+    "llm/similarity.py",
+    "llm/text.py",
+    "operators/acid_snapshots.py",
+    "operators/ddl_catalog.py",
+    "operators/graph_analytics.py",
+    "operators/materialized_views.py",
+    "operators/optimizer_features.py",
+    "operators/partition_pruning.py",
+    "operators/sequence_analytics.py",
+    "operators/skew_scale.py",
+    "operators/sql_script.py",
+    "operators/temporal_joins.py",
+    "plans/inspect.py",
+    "registry.py",
+    "scratch.py",
+    "sources/python_datasource.py",
+    "sources/source_queries.py",
+    "streaming/events.py",
+    "streaming/ingest.py",
+    "streaming/notifications.py",
+}
+
+
+def narration(source: str) -> list[str]:
+    """``line:text`` of history narration in comments and strings."""
+    return [
+        f"{tok.start[0]}:{m.group(0)}"
+        for tok in tokenize.generate_tokens(io.StringIO(source).readline)
+        if tok.type in (tokenize.COMMENT, tokenize.STRING)
+        for m in _NARRATION.finditer(tok.string)
+    ]
+
+
+def test_package_modules_narrate_no_history():
+    pkg = ROOT / "hive_service_spark"
+    bad, clean = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        hits = narration(path.read_text())
+        if rel in _NARRATION_ALLOWED:
+            clean += [] if hits else [rel]
+        else:
+            bad += [f"{rel}:{hit}" for hit in hits]
+    assert not bad, f"history narration in a package module: {bad}"
+    assert not clean, f"narration gone; drop from _NARRATION_ALLOWED: {clean}"
+    missing = [rel for rel in _NARRATION_ALLOWED if not (pkg / rel).exists()]
+    assert not missing, f"_NARRATION_ALLOWED names missing files: {missing}"
+
+
+def test_narration_lint_detects_a_planted_mention():
+    """Self-test: flags round numbers, verdicts and advice in comments
+    and docstrings; passes code, SQL ROUND(), round trips, SQL aliases
+    such as r2 and rounds of an algorithm."""
+    src = '''
+def f(x):
+    """Round 11: keeps the key (r12 verdict #3)."""
+    # round-12 ADVICE: null-safe
+    y = round(x, 2)  # ROUND half-up; the value round-trips
+    r2 = "SELECT r2.k, ROUND(v, 2) FROM t r2"
+    return y  # each round of the merge loop
+'''
+    assert narration(src) == [
+        "3:Round 11",
+        "3:r12",
+        "3:verdict",
+        "4:round-12",
+        "4:ADVICE",
+    ]

@@ -557,16 +557,12 @@ def _wand_mix() -> None:
 
 
 def _mp_cost() -> None:
-    """Automaton-vs-compiled cost lines (round-8 verdict #4; round 10
-    adds the overlap class): run the SAME MatchPath pattern over the
-    x8 events replica down BOTH paths — the compiled JVM plan (island
-    walk for view.view*.purchase; lead chain for the overlapping
-    signup.(view|click){1,2}.(click|purchase){1,2}) and the Arrow
-    automaton (force_automaton=True) — verifying the answers agree via
-    an aggregate fingerprint, and report both wall times. This is the
-    measured price a genuinely irregular pattern (one NEITHER compiler
-    can take: unbounded overlap, nested groups, min-0 first atoms)
-    pays for the Python stage."""
+    """Automaton-vs-compiled cost lines: run the SAME MatchPath
+    pattern over the x8 events replica down BOTH paths — the compiled
+    JVM plan (island walk for view.view*.purchase; lead chain for the
+    overlapping signup.(view|click){1,2}.(click|purchase){1,2}) and
+    the Arrow automaton (force_automaton=True) — verifying the answers
+    agree via an aggregate fingerprint, and report both wall times."""
     import pyspark.sql.functions as F
 
     from bench import measure
@@ -588,7 +584,7 @@ def _mp_cost() -> None:
         ),
         (
             "signup.(view|click){1,2}.(click|purchase){1,2}",
-            "lead chain (overlap, r10)",
+            "lead chain (overlap)",
             lambda: {
                 "signup": F.col("event_type") == "signup",
                 "view": F.col("event_type") == "view",
@@ -598,7 +594,7 @@ def _mp_cost() -> None:
         ),
         (
             "signup.(view.click|click){1,2}.purchase",
-            "lead chain (nested AST, r10b)",
+            "lead chain (nested)",
             lambda: {
                 "signup": F.col("event_type") == "signup",
                 "view": F.col("event_type") == "view",
@@ -608,7 +604,7 @@ def _mp_cost() -> None:
         ),
         (
             "view*.click+.purchase",
-            "island walk (min-0 lead, r10b)",
+            "island walk (min-0 lead)",
             lambda: {
                 "view": F.col("event_type") == "view",
                 "click": F.col("event_type") == "click",
@@ -803,6 +799,10 @@ def _run_measure(sf_dir: str, names: list[str], extra_env=None) -> dict[str, flo
         sys.stderr.write(out.stderr[-3000:])
         raise SystemExit(f"bench.py subprocess failed for {sf_dir}")
     return json.loads(out.stdout.splitlines()[-1])["queries"]
+
+
+# SCALE.md sections written by hand, which a rewrite carries over
+KEPT_SECTIONS = ("MatchPath plan regimes",)
 
 
 def main() -> None:
@@ -1120,27 +1120,15 @@ def main() -> None:
         "once. The quarantined keys stay auditable via "
         "skew_quarantine_audit.\n"
     )
-    lines.append("## MatchPath compiled vs automaton — same pattern\n")
+    lines.append("## MatchPath compiled vs automaton on the x8 replica\n")
     lines.append(
         f"Each pattern over the x{mp_cost[0]['events_x']} events "
         "replica down BOTH paths, answers verified identical by "
-        "aggregate fingerprint. `automaton_x` is the automaton's wall "
-        "relative to the compiled plan's (> 1 = compiled faster). "
-        "HONEST round-11 re-reading: the mapInPandas automaton "
-        "rewrite removed the per-key Python invocation overhead that "
-        "used to dominate its cost (old automaton_x 3.5-9.3 on these "
-        "patterns), and the rewritten automaton now measures WITHIN "
-        "~2x OF — sometimes under — the island-walk plans locally. "
-        "The compiled plans remain the default for what local wall "
-        "time cannot see: they stay entirely JVM-side (no Python "
-        "worker fleet on every executor, no Arrow boundary "
-        "serializing every event row), their per-row cost is O(1) in "
-        "run length where the automaton's per-start regex is O(L) "
-        "with backtracking (the unbounded-hot-key hazard the per-user "
-        "budget exists for), and whole-stage codegen fuses them into "
-        "the surrounding plan. The lead-chain table below prices "
-        "where the compiled coalesce genuinely loses; the cap now "
-        "sits exactly on that measured edge.\n"
+        "aggregate fingerprint; min of the warm runs. `automaton_x` is "
+        "the automaton's wall relative to the compiled plan's (> 1 = "
+        "compiled faster). The plan choice rests on the interleaved "
+        "A/B in the MatchPath plan regimes section, not on this "
+        "table.\n"
     )
     lines.append(
         "| pattern | compiled plan | n_matches | t_compiled (s) | "
@@ -1243,7 +1231,13 @@ def main() -> None:
         f"{wand_mix['t_wand_s']} s (WAND) vs {wand_mix['t_bm25_s']} s "
         "(plain BM25) on that corpus.\n"
     )
-    with open(os.path.join(REPO, "SCALE.md"), "w") as fh:
+    path = os.path.join(REPO, "SCALE.md")
+    if os.path.exists(path):
+        # hand-kept sections (interleaved tools/ab.py tables) survive
+        with open(path) as fh:
+            old = fh.read().split("\n## ")[1:]
+        lines += ["## " + sec for sec in old if sec.startswith(KEPT_SECTIONS)]
+    with open(path, "w") as fh:
         fh.write("\n".join(lines))
     print("wrote SCALE.md")
 
