@@ -470,23 +470,19 @@ _REGISTERED_ROUTES = {
 }
 
 
-def test_route_table():
+def _route4(pattern):
+    return _route(pattern, {"a": "a", "b": "b", "c": "c", "d": "d"})
+
+
+def test_chain_detection_and_fallback_scope():
     """The one routing rule (stated on matchpath()): a finite pattern
     within the lead caps takes the lead chain; otherwise a flat chain
     of disjoint charset atoms with at most 6 min-0 atoms, whose every
     variant ends in a segment of max 1 or unbounded, takes the island
-    walk; everything else the automaton. Pins the class of every
-    registered matchpath/npath pattern too."""
-    import inspect
-
+    walk; everything else the automaton."""
     from hive_service_spark.operators.matchpath import _LEAD_MAX_K
-    from hive_service_spark.registry import load_all
 
-    chars = {"a": "a", "b": "b", "c": "c", "d": "d"}
-
-    def route(pattern):
-        return _route(pattern, chars)
-
+    route = _route4
     for pattern, want in (
         # unbounded flat chains: the island walk
         ("a.b*.c", "chain"),
@@ -531,16 +527,40 @@ def test_route_table():
     ))
     assert route("a.(c|b)+.d")[1][1] == {"a": "a", "b": "b", "c": "b", "d": "d"}
 
-    # lead branches in regex-backtracking (count-descending) order,
-    # equal offset signatures deduplicated, K = the longest branch
-    ab, bc = frozenset("ab"), frozenset("bc")
+
+def test_lead_compositions_order_and_gates():
+    """The lead chain enumerates its branches in regex-backtracking
+    (count-descending) order, dedupes equal offset signatures, and
+    refuses unbounded or over-budget patterns (they route elsewhere)."""
+    from hive_service_spark.operators.matchpath import _LEAD_MAX_K
+
+    route = _route4
+    ab = frozenset("ab")
     kind, (comps, k) = route("(a|b){1,2}.(b|c){1,2}")
     assert kind == "lead" and k == 4
     assert [
         "".join("1" if cs == ab else "2" for cs in comp) for comp in comps
     ] == ["1122", "112", "122", "12"]
+
+    # same-set adjacency dedupes to distinct lengths only
     _, (comps, _) = route("(a|b){1,2}.(a|b){1,2}")
     assert [len(c) for c in comps] == [4, 3, 2]
+
+    # unbounded / over-budget: not the lead chain
+    assert route("(a|b)+.(b|c)")[0] != "lead"
+    assert route("(a|b){1,}.(b|c)")[0] != "lead"
+    assert route(f"(a|b){{1,{_LEAD_MAX_K + 1}}}")[0] != "lead"
+    # 8^3 = 512 branches but K = 21 > 16
+    assert route("(a|b){0,7}.(b|c){0,7}.(a|c){0,7}")[0] != "lead"
+    assert route("(a|b){1,1}")[0] == "lead"
+
+
+def test_route_table():
+    """Pins the plan class of every registered matchpath/npath pattern
+    to the routing rule stated on matchpath()."""
+    import inspect
+
+    from hive_service_spark.registry import load_all
 
     specs = load_all()
     registered = {
