@@ -17,7 +17,9 @@ are charged for them. Each run ends with `spark.catalog.clearCache()`.
 A suite entry gets one uncounted warmup and keeps the min of two
 measured runs: single-JVM local mode has large JIT/codegen noise, and
 the best warm number models steady-state executors, where generated
-code is compiled once and reused.
+code is compiled once and reused. codegen_compiles counts, per entry,
+the generated classes compiled during its measured runs (0 when the
+warmup left every class in the JVM's code cache).
 
 Host factor and the instrument gates. The JSON carries what a reader
 needs to tell a code change from a busy host:
@@ -58,7 +60,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hive_service_spark import scratch  # noqa: E402
 from hive_service_spark.registry import load_all  # noqa: E402
-from hive_service_spark.session import get_session, startup_info  # noqa: E402
+from hive_service_spark.session import (  # noqa: E402
+    codegen_counters,
+    get_session,
+    startup_info,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -312,11 +318,15 @@ def _run_suite(spark, specs, names: list[str]) -> dict:
     can decide whether the instrument reading is trustworthy."""
     times: dict[str, float] = {}
     offsets: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     suite_t0 = time.monotonic()
     for name in names:
         offsets[name] = round(time.monotonic() - suite_t0, 1)
         fn = functools.partial(specs[name].fn, spark, SF_DIR)
-        times[name] = round(min(measure(spark, fn)), 3)
+        measure(spark, fn, reps=0)
+        before = codegen_counters(spark)["compiles"]
+        times[name] = round(min(measure(spark, fn, warmup=0)), 3)
+        compiles[name] = codegen_counters(spark)["compiles"] - before
     end_samples = {
         name: min(
             measure(spark, functools.partial(specs[name].fn, spark, SF_DIR), warmup=0)
@@ -331,6 +341,7 @@ def _run_suite(spark, specs, names: list[str]) -> dict:
     return {
         "queries": times,
         "query_start_offsets": offsets,
+        "codegen_compiles": compiles,
         **_summarize(times, end_samples),
         "loadavg_end": loadavg_end,
     }
@@ -353,9 +364,11 @@ def _pick_run(first: dict, second: dict) -> tuple[dict, dict]:
 def _settings(spark) -> dict:
     """The settings that move timings, recorded next to the numbers:
     how the JVM started (``session.startup_info``), core count, shuffle
-    and scratch directories, and the join policy."""
+    and scratch directories, the join policy and the size of the
+    compiled-code cache."""
     keys = (
         "spark.local.dir",
+        "spark.sql.codegen.cache.maxEntries",
         "spark.sql.join.preferSortMergeJoin",
         "spark.sql.autoBroadcastJoinThreshold",
     )
@@ -418,6 +431,7 @@ def main(argv: list[str]) -> None:
                 "unit": "sec",
                 "queries": run["queries"],
                 "query_start_offsets": run["query_start_offsets"],
+                "codegen_compiles": run["codegen_compiles"],
                 "sf": SF_DIR,
                 "host_factor": run["host_factor"],
                 "host_factor_samples": run["host_factor_samples"],

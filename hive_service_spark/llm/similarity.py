@@ -15,10 +15,13 @@ Three tiers of nearest-neighbor search over the `embedding`
    probe their nearest cell only (nprobe=1).
 
 All arithmetic is double-precision pure column expressions
-(zip_with/aggregate — JVM codegen, no Python UDF); hyperplanes are
-md5-seeded ±1 literals baked identically into the Spark plan and the
-DuckDB oracle, so the oracles verify the ALGORITHM (same buckets, same
-cells, same ranks), not just shapes.
+(zip_with/aggregate in the JVM, no Python UDF). Spark generates no code
+for these higher-order functions: ``ZipWith`` and ``ArrayAggregate``
+are ``CodegenFallback`` expressions, so the generated stage calls their
+interpreted ``eval`` row by row. Hyperplanes are md5-seeded ±1 literals
+baked identically into the Spark plan and the DuckDB oracle, so the
+oracles verify the ALGORITHM (same buckets, same cells, same ranks),
+not just shapes.
 """
 
 from __future__ import annotations
@@ -614,7 +617,8 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: encoding is one MAP pass — the codebook is baked into
     the plan as literals (the broadcast of a 16x8-double table), so no
-    shuffle, no UDF, whole-stage codegen end to end. Scoring is the
+    shuffle, no UDF; the nested higher-order functions run by their
+    interpreted ``eval`` inside the generated stage. Scoring is the
     same broadcast-query join as the exact path but against 4-byte
     codes + a 128-entry lookup (here expressed as reconstruction dot
     products so the oracle can verify values); the final top-k window
@@ -1569,7 +1573,8 @@ def ml_random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     compress per-coordinate rather than by dimension).
 
     Scale: the projection is a stateless JVM map (zip_with/aggregate
-    over literal rows — no shuffle, no Python); the evaluation joins
+    over literal rows, evaluated row by row by their interpreted
+    ``eval`` — no shuffle, no Python); the evaluation joins
     are the bounded |Q| x n broadcast pattern of knn_cosine_bruteforce
     with Q capped at 200 at any corpus size. Projected values are
     quantized to 6dp so both engines rank identical doubles; ranks tie

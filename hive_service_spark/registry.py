@@ -45,16 +45,15 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # :func:`persisted`, evicted when the NEXT registered query starts ON
 # THE SAME THREAD. This scopes eviction twice over: (a) to frames the
 # registry itself created — a session-global
-# ``spark.catalog.clearCache()`` here (the round-5 shape) would also
-# evict every OTHER user's cached frames and MV caches in a long-lived
-# shared session (the HiveServer2/STS deployment shape this engine
-# mirrors) — and (b) to the invoking thread, so concurrent registered
-# queries can no longer evict an in-flight peer's persists and force
-# iterative consumers (the PageRank loop, the BPE merge chain) to
-# silently recompute their whole lineage per iteration (round-6
-# advice). Keyed by thread id; a reused id simply inherits eviction
-# duty for its predecessor's frames, which bounds the leak from
-# threads that die between queries.
+# ``spark.catalog.clearCache()`` here would also evict every OTHER
+# user's cached frames and MV caches in a long-lived shared session
+# (the HiveServer2/STS deployment shape this engine mirrors) — and (b)
+# to the invoking thread, so a registered query never evicts an
+# in-flight peer's persists, which would force iterative consumers
+# (the PageRank loop, the BPE merge chain) to silently recompute their
+# whole lineage per iteration. Keyed by thread id; a reused id simply
+# inherits eviction duty for its predecessor's frames, which bounds the
+# leak from threads that die between queries.
 _LIVE_FRAMES: dict[int, list[DataFrame]] = {}
 _LIVE_LOCK = threading.Lock()
 

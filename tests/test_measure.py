@@ -105,6 +105,7 @@ def test_ab_file_variants_abba_schedule_and_json(spark, tmp_path):
         "a",
         "b",
         "b_over_a_median",
+        "codegen_compiles",
         "b_wins",
         "alternations",
         "sf",
@@ -116,6 +117,8 @@ def test_ab_file_variants_abba_schedule_and_json(spark, tmp_path):
         assert rec[k]["q1"] <= rec[k]["median"] <= rec[k]["q3"]
     assert rec["a"]["variant"] == f"{variants}:a"
     assert 0 <= rec["b_wins"] <= ab.ALTERNATIONS
+    # after its warmup a variant's classes are in the JVM's code cache
+    assert rec["codegen_compiles"] == {"a": 0, "b": 0}
     assert rec["sf"] == str(tmp_path)
     json.dumps(rec)
 

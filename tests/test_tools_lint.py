@@ -274,7 +274,6 @@ _NARRATION_ALLOWED = {
     "operators/sql_script.py",
     "operators/temporal_joins.py",
     "plans/inspect.py",
-    "registry.py",
     "scratch.py",
     "sources/python_datasource.py",
     "sources/source_queries.py",

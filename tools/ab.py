@@ -18,8 +18,10 @@ ABBA order (A B, B A, A B, ...), each run one `bench.measure(...,
 reps=1, warmup=0)`, so host drift hits both variants alike.
 
 Prints one JSON line: per-variant samples, median and quartiles, the
-ratio of B's median to A's, the number of alternations B won, the sf
-dir and loadavg_start.
+ratio of B's median to A's, each variant's generated-class compiles
+over its alternations (`codegen_compiles`; a warm variant whose classes
+stay in the JVM's code cache compiles 0), the number of alternations B
+won, the sf dir and loadavg_start.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import SF_DIR, measure  # noqa: E402
 from hive_service_spark.registry import load_all, run  # noqa: E402
-from hive_service_spark.session import get_session  # noqa: E402
+from hive_service_spark.session import codegen_counters, get_session  # noqa: E402
 
 # ten pairs: the fewest on which a 9-of-10 win rule can be applied
 ALTERNATIONS = 10
@@ -109,14 +111,18 @@ def ab(spark, a: str, b: str, sf_dir: str = SF_DIR) -> dict:
     for fn in fns.values():
         measure(spark, fn, reps=0, warmup=1)
     samples: dict[str, list[float]] = {"a": [], "b": []}
+    compiles = {"a": 0, "b": 0}
     for i in range(ALTERNATIONS):
         for k in ("ab" if i % 2 == 0 else "ba"):
+            before = codegen_counters(spark)["compiles"]
             samples[k] += measure(spark, fns[k], reps=1, warmup=0)
+            compiles[k] += codegen_counters(spark)["compiles"] - before
     stats = {k: _stats(v) for k, v in samples.items()}
     return {
         "a": {"variant": a, **stats["a"]},
         "b": {"variant": b, **stats["b"]},
         "b_over_a_median": round(stats["b"]["median"] / stats["a"]["median"], 3),
+        "codegen_compiles": compiles,
         "b_wins": sum(tb < ta for ta, tb in zip(samples["a"], samples["b"])),
         "alternations": ALTERNATIONS,
         "sf": sf_dir,
